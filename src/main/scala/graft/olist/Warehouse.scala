@@ -5903,8 +5903,13 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * local file:// — exactly like the data writes do. */
   private def metaDir = new org.apache.hadoop.fs.Path(s"$basePath/_graft_meta")
 
+  /** The session's Hadoop conf, copied once per instance: a fresh
+    * `newHadoopConf()` copies every entry (~1k), and [[metaFs]] runs
+    * on every head probe, log read and qualified path. */
+  private lazy val metaConf = spark.sessionState.newHadoopConf()
+
   private def metaFs: org.apache.hadoop.fs.FileSystem =
-    metaDir.getFileSystem(spark.sessionState.newHadoopConf())
+    metaDir.getFileSystem(metaConf)
 
   private def writeMeta(name: String, parts: Seq[String],
       schema: org.apache.spark.sql.types.StructType,

@@ -531,7 +531,11 @@ object TextIndex {
   /** [[query]] against an externally-pinned read surface — the seam
     * [[AnnIndex.hybridQuery]] uses to put BOTH indexes' tables under
     * ONE snapshot cut, and the amortization path for a serving
-    * deployment holding one [[servingSnapshot]] across many calls. */
+    * deployment holding one [[servingSnapshot]] across many calls.
+    * The plan for ONE query — SQL `SEARCH INDEX` serves through it:
+    * one per-doc pivot shuffle and an `orderBy(…).limit(k)` that
+    * plans as a TakeOrderedAndProject; [[queryBatchOn]] is for N
+    * queries at once. */
   def queryOn(read: String => DataFrame, idx: String,
       terms: Seq[String], k: Int,
       docFilter: Option[DataFrame] = None): DataFrame = {
@@ -587,7 +591,10 @@ object TextIndex {
   /** [[query]] for N queries in ONE distributed pass — the sparse twin
     * of [[AnnIndex.queryBatch]]: a retrieval service answering per
     * query pays |queries| driver-scheduled jobs and |queries| postings
-    * reads through the loop; this batches the whole set. ONE
+    * reads through the loop; this batches the whole set. For a single
+    * query the fold, salted windows and range sort below cost about
+    * twice [[queryOn]]'s Spark jobs for the same answer — use
+    * [[query]]/[[queryOn]] there. ONE
     * term-pruned postings scan over the UNION of every query's terms,
     * the per-(query, term) df literals broadcast, per-term BM25
     * contributions summed per (query, doc) in TERM-INDEX ORDER (an

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -33,13 +33,19 @@ import org.apache.spark.sql.types.{LongType, StringType}
   *   spark.sql("ALTER VECTOR INDEX ann RETRAIN ON vectors THRESHOLD 0.8")
   *   spark.sql("ALTER VECTOR INDEX ann RETRAIN ON vectors WITH (n_cells = 32)")  // geometry evolution
   *   spark.sql("ALTER VECTOR INDEX ann AUTORESIZE ON vectors MAX_CELL_ROWS 100000")  // shape-health auto rule
+  *   spark.sql("SEARCH INDEX ti [ON docs] FOR 'text' TOP 10 [WHERE p]")  // BM25, single-query plan
   *   spark.sql("VECTOR SEARCH ann ON vectors NEAREST (0.1, …) TOP 10 EXACT")     // brute-force-equal ranking
   *   spark.sql("AUDIT TABLE t [DEEP]")            // the warehouse fsck
   *   spark.sql("AUDIT VECTOR INDEX ann")          // index-invariant fsck (+ SEARCH)
   *
   * A statement only binds to the warehouse when the named table has a
   * committed snapshot there — otherwise it delegates, so catalog
-  * tables keep Spark's own semantics. */
+  * tables keep Spark's own semantics.
+  *
+  * A `SEARCH INDEX` statement carries one query, so it runs
+  * [[graft.operators.TextIndex.queryOn]]'s single-query plan (one
+  * per-doc pivot shuffle, a TakeOrderedAndProject top-k), never the
+  * N-query batch plan (`queryBatchOn`). */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
@@ -415,6 +421,19 @@ object GraftSqlParser {
       1, 9, true)
     .optionalEnd()
     .toFormatter
+
+  /** The plan of one `SEARCH INDEX` statement: the text through the
+    * index's own tokenizer, then the single-query BM25 plan (see the
+    * class doc). Output (doc_id, dl, score), (score desc, doc_id). */
+  private def searchPlan(session: SparkSession,
+      read: String => DataFrame, idx: String,
+      text: String, k: Int,
+      docFilter: Option[DataFrame]): LogicalPlan = {
+    val terms = graft.operators.TextIndex
+      .tokenizeQueries(session, Seq((0L, text))).head._2
+    graft.operators.TextIndex.queryOn(read, idx, terms, k, docFilter)
+      .queryExecution.logical
+  }
 
   private def parseInstant(s: String): java.time.Instant =
     scala.util.Try(java.time.Instant.parse(s)).getOrElse {
@@ -1007,31 +1026,24 @@ object GraftSqlParser {
               graft.operators.TextIndex.servingSnapshot(wh, idx)
             else graft.operators.TextIndex.servingSnapshotAt(wh, idx,
               parseInstant(asOf))
-          graft.operators.TextIndex.queryBatchOn(read, session, idx,
-              graft.operators.TextIndex.tokenizeQueries(session,
-                Seq((0L, text))), k.toInt)
-            .drop("query_id").queryExecution.logical
+          searchPlan(session, read, idx, text, k.toInt, None)
         }
       case SearchIdxFiltered(idx, src, text, k, pred, asOf) =>
         boundTable(session, src).map { wh =>
-          val out =
-            if (asOf == null)
-              graft.operators.TextIndex.queryTextBatch(wh, idx,
-                Seq((0L, text)), k.toInt,
-                docFilter = Some(wh.table(src).filter(expr(pred))))
-            else {
-              // the allowlist evaluates against the SAME instant's
-              // source rows — replaying a filtered query needs the
-              // filter's world frozen too
-              val snap = wh.snapshotTablesAt(
-                graft.operators.TextIndex.servingTables(idx) :+ src,
-                parseInstant(asOf))
-              graft.operators.TextIndex.queryBatchOn(snap(_), session,
-                idx, graft.operators.TextIndex.tokenizeQueries(session,
-                  Seq((0L, text))), k.toInt,
-                docFilter = Some(snap(src).filter(expr(pred))))
-            }
-          out.drop("query_id").queryExecution.logical
+          if (asOf == null)
+            searchPlan(session,
+              graft.operators.TextIndex.servingSnapshot(wh, idx), idx,
+              text, k.toInt, Some(wh.table(src).filter(expr(pred))))
+          else {
+            // the allowlist evaluates against the SAME instant's
+            // source rows — replaying a filtered query needs the
+            // filter's world frozen too
+            val snap = wh.snapshotTablesAt(
+              graft.operators.TextIndex.servingTables(idx) :+ src,
+              parseInstant(asOf))
+            searchPlan(session, snap(_), idx, text, k.toInt,
+              Some(snap(src).filter(expr(pred))))
+          }
         }
       case VectorSearchFiltered(idx, src, vec, k, pred, exact, asOf) =>
         boundTable(session, src).map { wh =>

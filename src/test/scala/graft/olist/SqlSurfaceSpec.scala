@@ -699,16 +699,36 @@ class SqlSurfaceSpec extends AnyFunSuite {
     spark.sql("CREATE VECTOR INDEX ann ON vectors").collect()
     val text = graft.operators.TextAnalysis.bm25Query.mkString(" ")
     // SEARCH INDEX … FOR '<raw text>': tokenizes through the index's
-    // analyzer, answers from the stored decomposition
-    val gotS = spark.sql(s"SEARCH INDEX ti FOR '$text' TOP 10")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq
-    val apiS = graft.operators.TextIndex
-      .queryTextBatch(wh, "ti", Seq((0L, text)), 10).drop("query_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSeq
-    assert(gotS == apiS, s"SQL search ≠ API:\n$gotS\n$apiS")
-    assert(gotS.size == 10)
+    // analyzer, answers from the stored decomposition — ≡ both API
+    // forms: the single-query TextIndex.query over the same terms and
+    // the N-query queryTextBatch over the raw text
+    def rows3(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSeq
+    def parity(text: String, terms: Seq[String], k: Int) = {
+      val got = rows3(spark.sql(s"SEARCH INDEX ti FOR '$text' TOP $k"))
+      val single =
+        rows3(graft.operators.TextIndex.query(wh, "ti", terms, k))
+      val batch = rows3(graft.operators.TextIndex
+        .queryTextBatch(wh, "ti", Seq((0L, text)), k).drop("query_id"))
+      assert(got == single, s"SQL ≠ query for '$text':\n$got\n$single")
+      assert(got == batch,
+        s"SQL ≠ queryTextBatch for '$text':\n$got\n$batch")
+      got
+    }
+    assert(parity(text, graft.operators.TextAnalysis.bm25Query, 10)
+      .size == 10)
+    // a repeated query term counts once per occurrence in every form
+    val rep = parity("vector vector stream",
+      Seq("vector", "vector", "stream"), 10)
+    assert(rep.size == 10 &&
+      rep != parity("vector stream", Seq("vector", "stream"), 10))
+    // a score tie straddling rank k: every form cuts it by doc_id
+    val tie = rows3(
+      graft.operators.TextIndex.query(wh, "ti", Seq("window"), 11))
+    assert(tie(9)._3 == tie(10)._3 && tie(9)._1 < tie(10)._1,
+      s"fixture: 'window' must tie at ranks 10 and 11: $tie")
+    assert(parity("window", Seq("window"), 10) == tie.take(10))
     // VECTOR SEARCH … NEAREST (literal): double literals round-trip
     // exactly through toString, so SQL ≡ queryVecBatch bit-for-bit
     val raw = emb.filter(col("vec_id") === 0L)
@@ -754,6 +774,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .toSeq
     assert(gotSF == apiSF && gotSF.size == 10 &&
       gotSF.forall(_._1 % 2 == 0))
+    assert(gotSF == rows3(graft.operators.TextIndex.query(wh, "ti",
+      graft.operators.TextAnalysis.bm25Query, 10,
+      docFilter = Some(evenDocs))))
     val gotVF = spark.sql(s"VECTOR SEARCH ann ON vectors " +
         s"NEAREST ($vecLit) TOP 10 WHERE label = 3")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -775,6 +798,30 @@ class SqlSurfaceSpec extends AnyFunSuite {
         filter = Some(col("label") === 3)).drop("query_id")
       .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq
     assert(gotHF == apiHF && gotHF.forall(r => labeled.contains(r._1)))
+  }
+
+  test("SEARCH INDEX plans one query: no window, collect_list fold or range sort in the plain or filtered plan") {
+    val dir = tmp("sql_search_plan")
+    val wh = new Warehouse(spark, dir)
+    wh.enableSql()
+    import spark.implicits._
+    // a synthetic corpus: the plan's shape does not depend on the data
+    wh.save("docs", (0L until 40L).map { i =>
+      (i, "vector " * (1 + (i % 3).toInt) + "stream merge" +
+        " pad" * (i % 7).toInt)
+    }.toDF("doc_id", "text"))
+    spark.sql("CREATE SEARCH INDEX ti ON docs").collect()
+    for (q <- Seq("SEARCH INDEX ti FOR 'vector stream merge' TOP 10",
+        "SEARCH INDEX ti ON docs FOR 'vector stream merge' TOP 10 " +
+          "WHERE doc_id % 2 = 0")) {
+      val df = spark.sql(q)
+      assert(df.collect().length == 10, q)
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("TakeOrderedAndProject"), p)
+      assert(!p.contains("Window"), p)
+      assert(!p.contains("collect_list"), p)
+      assert(!p.toLowerCase.contains("rangepartitioning"), p)
+    }
   }
 
   test("DESCRIBE PRUNING reports manifest-level file admission for range and IN predicates") {
