@@ -1,15 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs the headline queries on
   * sys.env("SPARK_GRAFT_SF_DIR") and prints ONE JSON line.
   *
-  * local[32] with 32 shuffle partitions (matches the container's CPU
-  * budget; at cluster scale the same plans run with
-  * spark.sql.shuffle.partitions sized to executor count × cores).
+  * local[cpus] with cpus shuffle partitions, cpus from
+  * SPARK_GRAFT_CPUS (default 32; at cluster scale the same plans run
+  * with spark.sql.shuffle.partitions sized to executor count × cores).
   */
 object Bench {
+
+  /** Session width of the bench lanes, shared by the diagnostic tools
+    * so their plans and timings are the ones the bench runs. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   /** Headline subset: the scan → join → aggregate → top-k spine plus
     * one representative of each extension family (exact dedup, simhash,
@@ -91,16 +93,9 @@ object Bench {
     * SQL metadata fold) still RUN here — through the plain scan, which
     * is itself the informative comparison. Disable with
     * SPARK_GRAFT_BENCH_VANILLA=0. */
-  private def vanillaLane(sfDir: String, cpus: String)
+  private def vanillaLane(sfDir: String)
       : (Seq[(String, Double)], Seq[String]) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-vanilla")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus, extensions = false)
     spark.sparkContext.setLogLevel("WARN")
     Tables.lineitem(spark, sfDir).count()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -126,23 +121,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // the vanilla lane runs FIRST, in its own session and context, so
     // the graft lane's numbers stay directly comparable to prior
     // rounds' (same warm-up position, same JVM phase)
     val (vanilla, vanillaFailed) =
       if (sys.env.get("SPARK_GRAFT_BENCH_VANILLA").contains("0"))
         (Nil, Nil)
-      else vanillaLane(sfDir, cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // native fns available in SQL
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      else vanillaLane(sfDir)
+    val spark = Sessions.local(cpus, extensions = true)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM + parquet footer caches once so per-query numbers

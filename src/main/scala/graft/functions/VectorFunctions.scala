@@ -249,10 +249,6 @@ object VectorFunctions {
     register(spark)
     call_function("cosine_sim", a, b)
   }
-  def vecDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("vec_dot", a, b)
-  }
 
   // ---------------------------------------------------------------
   // Exact (order-independent) decimal variants for oracle parity.

@@ -1,6 +1,6 @@
 package graft.olist
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end library drive: CSV sources with declared schemas (S1) →
@@ -15,13 +15,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val csvDir = if (args.nonEmpty) args(0) else "/tmp/olist_csv"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("olist-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("4", extensions = false)
     spark.sparkContext.setLogLevel("ERROR")
 
     writeSampleCsvs(csvDir)

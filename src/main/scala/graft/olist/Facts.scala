@@ -22,13 +22,6 @@ object Facts {
     ((unix_timestamp(date_trunc("hour", b)) -
       unix_timestamp(date_trunc("hour", a))) / 3600L).cast("int")
 
-  /** The yyyymmdd int date key (Package.dtsx:175, DT_I4). Computed as
-    * ints on both join sides so Catalyst plans a plain int equi-join
-    * instead of the reference's per-row string-conversion join
-    * (SURVEY J6 — the scale-safe rewrite of the expression join). */
-  def dateKeyOf(ts: Column): Column =
-    date_format(ts, "yyyyMMdd").cast("int")
-
   /** orders fact — grain: date × seller-location × product-category ×
     * seller (Olist DW.sql:143-156). */
   def ordersFact(orders: DataFrame, orderItems: DataFrame,

@@ -52,7 +52,7 @@ object Reports {
     * directories and this layer picks the files inside them. Identical
     * rows to the unpruned report (residual filter keeps scans exact);
     * pair with [[Warehouse.scanFileCounts]] for the files-read/total
-    * observability the ScaleBench line reports. */
+    * observability (the benchmark's `warehouse.files_read_share`). */
   def yearRange(yr: Int): Warehouse.ColRange =
     Warehouse.ColRange("date_key", Some(yr * 10000 + 101), Some(yr * 10000 + 1231))
 

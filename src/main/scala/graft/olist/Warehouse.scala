@@ -3134,7 +3134,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
         // combine(outer): rows with no delta side pass through
         // untouched, everything else gets the arithmetic — measured to
         // matter, the refresh cost is dominated by fixed per-job
-        // overhead at small deltas (see BASELINE.md MvScale)
+        // overhead at small deltas (see BASELINE.md "Incremental MV
+        // refresh vs full recompute")
         val touchedRows = fromFiles(mv, touched.toSeq, mvSc)
         val metric = (l: org.apache.spark.sql.Column,
             r: org.apache.spark.sql.Column) =>

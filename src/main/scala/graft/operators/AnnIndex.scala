@@ -381,15 +381,6 @@ object AnnIndex {
     (snap(_), release)
   }
 
-  /** [[hybridSnapshot]] with a VACUUM SHIELD — both indexes' serving
-    * tables pinned as one held cut. */
-  def hybridSnapshotHeld(wh: Warehouse, annIdx: String, textIdx: String,
-      holder: String): (String => DataFrame, () => Unit) = {
-    val (snap, release) = wh.holdSnapshot(
-      servingTables(annIdx) ++ TextIndex.servingTables(textIdx), holder)
-    (snap(_), release)
-  }
-
   /** REPRODUCIBLE serving — [[TextIndex.servingSnapshotAt]]'s dense
     * twin: the probe surface AS OF a past instant, whole-transaction
     * verified ([[Warehouse.snapshotTablesAt]] — a [[retrain]]'s three
@@ -931,18 +922,6 @@ object AnnIndex {
       textIdx: String): String => DataFrame = {
     val snap = wh.snapshotTables(
       servingTables(annIdx) ++ TextIndex.servingTables(textIdx))
-    snap(_)
-  }
-
-  /** [[hybridSnapshot]] AS OF a past instant — both indexes' seven
-    * serving tables resolved to one whole-transaction-verified
-    * historical cut ([[Warehouse.snapshotTablesAt]]); feed to
-    * [[hybridQueryVecBatchOn]] to reproduce a past fused answer
-    * exactly. */
-  def hybridSnapshotAt(wh: Warehouse, annIdx: String, textIdx: String,
-      ts: java.time.Instant): String => DataFrame = {
-    val snap = wh.snapshotTablesAt(
-      servingTables(annIdx) ++ TextIndex.servingTables(textIdx), ts)
     snap(_)
   }
 

@@ -56,11 +56,6 @@ object Dedup {
   def adjacentDistinct(sorted: Column): Column =
     filter(sorted, (x, i) => i === 0 || x =!= element_at(sorted, i))
 
-  /** MinHash signature value for seed `i`: lexicographic min of
-    * md5("i:" + element). */
-  def minhashSig(elems: Column, i: Int): Column =
-    array_min(transform(elems, e => md5(concat(lit(s"$i:"), e))))
-
   /** LSH band hashes: md5 over `rows` consecutive signature columns. */
   def bandHashes(sigCols: Seq[Column], rows: Int): Column =
     array(sigCols.grouped(rows).map(g => md5(concat(g: _*))).toSeq: _*)

@@ -301,8 +301,9 @@ object Ingest {
     * stream must keep committing through maintenance hiccups (a
     * committed batch can never be failed retroactively), but the
     * swallowed exception used to go nowhere, which meant debris
-    * growing without bound with zero signal (exactly the drift
-    * [[MaintScale]] measures). SQL: `DESCRIBE INGEST LOG t MAINT`. */
+    * growing without bound with zero signal (the drift BASELINE.md's
+    * "Index maintenance: the debris drift" section measured). SQL:
+    * `DESCRIBE INGEST LOG t MAINT`. */
   def maintTable(table: String): String = s"${table}_maint"
 
   /** The maintenance ledger as a frame, time-ordered — empty with the
@@ -512,7 +513,7 @@ object Ingest {
     * ingest on the same index). The cadence trades steady-state file
     * counts against per-n-triggers maintenance cost (the df fold is
     * O(live vocab)); without it, debris grows one small file per
-    * table per trigger forever ([[MaintScale]]'s measured drift).
+    * table per trigger forever (BASELINE.md's measured debris drift).
     * Runs through [[optimizeLogged]]: a maintenance hiccup must never
     * fail a batch that already committed, but every attempt — success
     * counters or the error — lands in the [[maintTable]] ledger, so a

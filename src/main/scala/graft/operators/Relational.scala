@@ -42,7 +42,7 @@ object Relational {
     * bound the SAME side carries a SHUFFLE_HASH hint instead: the
     * per-partition hash build of the provably smaller side — no
     * broadcast cliff, and still never a fact-side build. */
-  private def dimJoinHint(dims: org.apache.spark.sql.DataFrame)
+  private[graft] def dimJoinHint(dims: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     // analyzed (not optimized) plan: leaf scan stats are the file
     // sizes either way, and reading them off the analyzed tree skips

@@ -957,11 +957,6 @@ object TextAnalysis {
         flags.map(_._2).reduce(_ * _).as("keep")): _*)
   }
 
-  /** t15's conjunction as a single filter predicate — what a pipeline
-    * stage pushes straight onto the scan. */
-  def gopherKeep(text: Column): Column =
-    gopherFlags(text).map(_._2).reduce(_ * _) === 1
-
   /** t16's per-line keep predicate (C4 §2.2): terminal punctuation,
     * ≥5 words, no "javascript". `l` is one line. */
   def c4LineKeep(l: Column): Column =

@@ -573,15 +573,16 @@ object TextIndex {
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf$i")
     }
-    val withStats = matched.groupBy("doc_id", "dl")
+    // corpus stats and per-term df as literals in ONE projection (a
+    // withColumn chain re-analyzes the plan once per column)
+    val statCols = lit(st.getLong(0)).as("n") +:
+      lit(st.getLong(1)).as("sum_dl") +:
+      terms.zipWithIndex.map { case (t, i) =>
+        lit(dfs.getOrElse(t, 0L)).as(s"df$i")
+      }
+    matched.groupBy("doc_id", "dl")
       .agg(tfCols.head, tfCols.tail: _*)
-      .withColumn("n", lit(st.getLong(0)))
-      .withColumn("sum_dl", lit(st.getLong(1)))
-    val withDfs = terms.zipWithIndex.foldLeft(withStats) {
-      case (df0, (t, i)) =>
-        df0.withColumn(s"df$i", lit(dfs.getOrElse(t, 0L)))
-    }
-    withDfs
+      .select(col("*") +: statCols: _*)
       .select(col("doc_id"), col("dl"),
         round(TextAnalysis.bm25ScoreExpr(terms.size), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))

@@ -1,15 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: write the formatted physical plan of every Bench
   * headline query (or an explicit list) to one file each — the
   * optimization round's before/after plan evidence.
   *
   *   sbt "runMain graft.tools.PlanDumpAll /root/testdata/sf0.1 plans/r17 _before [q1,q2,...]"
   *
-  * Session config mirrors Bench's graft lane (local[32], extensions,
-  * AQE, 32 shuffle partitions) so the captured plans are the plans the
+  * The session is Bench's graft lane ([[graft.Bench.cpus]] wide,
+  * extensions installed) so the captured plans are the plans the
   * bench actually runs. Queries that execute eagerly during DataFrame
   * construction (the exact ANN lanes return local relations) still
   * capture — their file records the LocalRelation plus a note.
@@ -20,15 +18,7 @@ object PlanDumpAll {
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = if (args.length > 2) args(2) else "_before"
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .appName("graft-plandump-all")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(graft.Bench.cpus, extensions = true)
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.length > 3) args(3).split(",").toSeq

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: per-JOB time breakdown of one SparkEntry query —
   * shows where a serving lane's wall-clock goes (driver collects vs
@@ -15,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .appName("graft-profileq")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(graft.Bench.cpus, extensions = true)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.lineitem(spark, dir).count()
     args.tail.foreach { name =>
@@ -57,7 +48,7 @@ object ProfileQ {
         println(f"  job $id%3d  $s%7.3f s  ${d.take(110)}")
       }
       val sum = done.map(_._2).sum
-      println(f"  jobs_total=$sum%.3f s (wall − jobs = ${wall - sum}%.3f s driver/planning)")
+      println(f"  jobs_total=$sum%.3f s (wall − jobs = ${wall - sum}%.3f s outside Spark jobs)")
     }
     spark.stop()
   }

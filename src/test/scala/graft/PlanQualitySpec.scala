@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, JoinStrategyHint, ResolvedHint, SHUFFLE_HASH}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the properties that keep these plans
@@ -36,6 +37,24 @@ class PlanQualitySpec extends AnyFunSuite {
     val p = plan("j10_star")
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("Join"), p)
+  }
+
+  private def hintStrategies(df: org.apache.spark.sql.DataFrame): Seq[JoinStrategyHint] =
+    operators.Relational.dimJoinHint(df).queryExecution.analyzed.collect {
+      case h: ResolvedHint => h.hints.strategy
+    }.flatten
+
+  test("dimJoinHint: a dim chain past the 256 MB leaf-byte gate gets SHUFFLE_HASH, not BROADCAST") {
+    // Range's leaf sizeInBytes is 8 B/row: 2^26 rows = 512 MB
+    val hints = hintStrategies(spark.range(1L << 26).toDF())
+    assert(hints.contains(SHUFFLE_HASH), hints)
+    assert(!hints.contains(BROADCAST), hints)
+  }
+
+  test("dimJoinHint: a dim chain under the gate broadcasts") {
+    val hints = hintStrategies(spark.range(1000).toDF())
+    assert(hints.contains(BROADCAST), hints)
+    assert(!hints.contains(SHUFFLE_HASH), hints)
   }
 
   test("o1_topk: top-k plans TakeOrderedAndProject (no global sort)") {
