@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   *
   * Parity contract (pinned by DecimalFoldParitySpec against the
   * `zip_with`/`aggregate` Column fold these replace — the fold itself
-  * is kept as [[VectorFunctions.dotExactHof]] for the spec): the
+  * is kept in test scope as `graft.HofFolds.dotExactHof`): the
   * result double is BIT-IDENTICAL to
   *
   * {{{

@@ -254,11 +254,9 @@ object VectorFunctions {
   // Exact (order-independent) decimal variants for oracle parity.
   // Since r18 the production forms are the fused native expressions
   // (DotExactDec / CosineExactDec — one codegen'd loop per row); the
-  // zip_with/aggregate Column folds they replaced are kept below as
-  // the *Hof twins, exercised only by DecimalFoldParitySpec, which
-  // pins bit-identity between the two forms.
-
-  private val DEC = DecimalType(38, 20)
+  // zip_with/aggregate Column folds they replaced live in test scope
+  // as graft.HofFolds, where DecimalFoldParitySpec pins bit-identity
+  // between the two forms.
 
   private def expr(c: Column) =
     org.apache.spark.sql.GraftColumnShim.expression(c)
@@ -267,7 +265,8 @@ object VectorFunctions {
 
   /** Σ a_i*b_i with each product cast to DECIMAL(38,20) before an exact
     * sum — identical on every engine regardless of accumulation order.
-    * Fused native ([[DotExactDec]]); bit-parity with [[dotExactHof]]. */
+    * Fused native ([[DotExactDec]]); bit-parity with the test-scope
+    * `graft.HofFolds.dotExactHof`. */
   def dotExact(a: Column, b: Column): Column =
     toCol(DotExactDec(expr(a), expr(b)))
 
@@ -288,21 +287,6 @@ object VectorFunctions {
     * form of Dedup.sortedGramDigests + adjacentDistinct. */
   def gramDigests(toks: Column, n: Int): Column =
     toCol(GramDigests(expr(toks), n))
-
-  /** The r17-and-earlier interpreted fold — parity oracle ONLY. */
-  private[graft] def dotExactHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(DEC)),
-      lit(java.math.BigDecimal.ZERO).cast(DEC),
-      // decimal + decimal widens to (38,19) in Spark; re-cast keeps the
-      // accumulator type stable (the true sum fits in 18 integer digits,
-      // so the cast is exact)
-      (acc, v) => (acc + v).cast(DEC)).cast("double")
-
-  private[graft] def normExactHof(a: Column): Column = sqrt(dotExactHof(a, a))
-
-  private[graft] def cosineExactHof(a: Column, b: Column): Column =
-    dotExactHof(a, b) / (normExactHof(a) * normExactHof(b))
 
   /** The matching DuckDB rendering (for oracle SQL generators):
     * cast(sum(cast(x*y as decimal(38,20))) as double) over positionally

@@ -14,24 +14,15 @@ import org.apache.spark.sql.functions._
   * tables are written partitioned by year (SURVEY §4: partition pruning
   * on the date axis; dims stay broadcast-sized and unpartitioned).
   *
-  * Path-mode tables commit through a version manifest (the minimal
+  * Tables commit through a version manifest (the minimal
   * transactional core of a table format): every write publishes a new
   * immutable file-list version, reads resolve one version per
   * DataFrame, and superseded files survive until [[vacuum]] — so
   * compaction and partition upserts are snapshot-consistent for
   * concurrent readers instead of exposing partial directory listings.
-  *
-  * With `database = Some("olist_dw")` the build lands in the session
-  * catalog instead (the moral equivalent of the reference's persistent
-  * `Olist_DW` database, `Olist DW.sql:39-51`): `CREATE DATABASE IF NOT
-  * EXISTS` (S9), managed `saveAsTable` per table, and `ANALYZE TABLE …
-  * COMPUTE STATISTICS` after every build step so the cost-based
-  * optimizer sees row counts / sizes (SURVEY §4 CBO row); dimension
-  * tables additionally get per-column NDV stats (the join-reorder and
-  * broadcast-threshold inputs).
   */
 class Warehouse(val spark: SparkSession, basePath: String,
-    format: String = "parquet", database: Option[String] = None,
+    format: String = "parquet",
     lockAcquireMs: Long = 30000, val lockStaleMs: Long = 600000,
     checkpointEvery: Int = 16) {
   import Normalize.norm
@@ -39,17 +30,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[Warehouse])
 
-  /** Whether this warehouse commits through the path-mode version
-    * manifest (true) or the session catalog (false) — the surfaces
-    * that ride the manifest (time travel, pins, vacuum, transactions)
-    * exist only in path mode, and the SQL layer reads this to refuse
-    * them with a real diagnosis instead of a generic require. */
-  def isPathMode: Boolean = database.isEmpty
-
   require(Seq("parquet", "orc", "json", "csv").contains(format),
     s"unsupported warehouse format: $format")
-
-  database.foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
 
   /** Partition spec recorded at save time so appends lay files out
     * identically (a flat append into a partitioned directory corrupts
@@ -323,7 +305,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * declared tables wait on the file lock up to `lockAcquireMs` then
     * fail loudly — size long transactions accordingly. */
   def beginTransaction(names: Seq[String]): Unit = {
-    require(database.isEmpty, "transaction applies to path-mode tables only")
     require(names.nonEmpty, "transaction: declare at least one table")
     require(txnState.get() == null,
       "transaction: already inside a transaction (nesting unsupported)")
@@ -419,7 +400,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * an unreferenced one — a rolled-back or healed transaction's —
     * always reclaims. Returns the number of markers deleted. */
   def vacuumTxnMarkers(): Int = {
-    require(database.isEmpty, "vacuumTxnMarkers applies to path-mode warehouses")
     val fs = metaFs
     val markerDir = txnMarkerPath("x", "x").getParent
     if (!fs.exists(markerDir)) 0
@@ -507,49 +487,32 @@ class Warehouse(val spark: SparkSession, basePath: String,
   private val bloomCols = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
 
   private def clusterColsOf(name: String): Seq[String] =
-    clustering.getOrElseUpdate(name, database match {
-      case Some(db) =>
-        // recorded as a table property so a NEW instance over the
-        // catalog recovers it like it recovers partition columns
-        scala.util.Try(
-          spark.sql(s"SHOW TBLPROPERTIES $db.$name('$ClusterProp')")
-            .collect().headOption.map(_.getString(1))
-            .filterNot(_.contains("does not have property"))).toOption.flatten
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Nil)
-      case None =>
-        currentManifestFull(name).flatMap(_._3.get(ClusterMeta))
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(loadMeta(name)._3)
-    })
+    clustering.getOrElseUpdate(name,
+      currentManifestFull(name).flatMap(_._3.get(ClusterMeta))
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .getOrElse(loadMeta(name)._3))
 
   /** Bloom-filter columns — the point-lookup complement of the min/max
     * stats: high-cardinality columns (ids, digests) where every file
     * spans the whole value space, so ranges prune nothing but a
-    * membership sketch prunes almost everything. Path-mode only. */
+    * membership sketch prunes almost everything. */
   private def bloomColsOf(name: String): Seq[String] =
-    bloomCols.getOrElseUpdate(name, database match {
-      case Some(_) => Nil
-      case None =>
-        currentManifestFull(name).flatMap(_._3.get(BloomMeta))
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(loadMeta(name)._5)
-    })
+    bloomCols.getOrElseUpdate(name,
+      currentManifestFull(name).flatMap(_._3.get(BloomMeta))
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .getOrElse(loadMeta(name)._5))
 
   /** Declared extra stats columns — [[statsBy]]'s table-layout state,
     * recovered from the manifest like the cluster/bloom lists. */
   private val statsByDecl = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
 
   private def statsColsOf(name: String): Seq[String] =
-    statsByDecl.getOrElseUpdate(name, database match {
-      case Some(_) => Nil
-      case None =>
-        currentManifestFull(name).flatMap(_._3.get(StatsByMeta))
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Nil)
-    })
+    statsByDecl.getOrElseUpdate(name,
+      currentManifestFull(name).flatMap(_._3.get(StatsByMeta))
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .getOrElse(Nil))
 
-  /** Declare extra statistics columns for a path-mode table: every
+  /** Declare extra statistics columns for a table: every
     * later write records min/max ranges AND an HLL NDV sketch for
     * `cols` alongside the cluster/bloom stats, and THIS call re-collects
     * stats for the current snapshot in one columnar pass (files keep
@@ -566,7 +529,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * `cols = Nil` clears the declaration (future writes stop sketching
     * the extras; existing manifest entries keep theirs until rewritten). */
   def statsBy(name: String, cols: Seq[String]): Unit = {
-    require(database.isEmpty, "statsBy applies to path-mode tables only")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name)
         .map(t => (t._2, t._3)).getOrElse(
@@ -605,16 +567,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
   }
 
   /** Cluster KIND (linear sort vs z-order interleave) — table layout
-    * like the column list, recovered the same way. Catalog mode is
-    * always linear (zorder is a path-mode layout). */
+    * like the column list, recovered the same way. */
   private def clusterKindOf(name: String): String =
-    clusterKinds.getOrElseUpdate(name, database match {
-      case Some(_) => LinearKind
-      case None =>
-        currentManifestFull(name).flatMap(_._3.get(ClusterKindMeta))
-          .orElse(loadMeta(name)._4)
-          .getOrElse(LinearKind)
-    })
+    clusterKinds.getOrElseUpdate(name,
+      currentManifestFull(name).flatMap(_._3.get(ClusterKindMeta))
+        .orElse(loadMeta(name)._4)
+        .getOrElse(LinearKind))
 
   /** Re-applies the table's recorded clustering to rows about to be
     * written.
@@ -654,8 +612,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
     } else df.sortWithinPartitions((parts ++ cluster).map(col): _*)
   }
 
-  /** S4 CTAS-style sink + catalog registration (reference:
-    * SELECT..INTO, Olist DW.sql:64-67 etc.). Path mode commits through
+  /** S4 CTAS-style sink + `dw_<name>` view registration (reference:
+    * SELECT..INTO, Olist DW.sql:64-67 etc.). The write commits through
     * the version manifest (see [[commitManifest]]): data files land
     * first, the manifest swap is the atomic commit point, and readers
     * pinned to the previous version keep a complete snapshot.
@@ -669,13 +627,13 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * sort so the partitioned writer's own required ordering is already
     * satisfied and doesn't re-sort away the clustering.
     *
-    * `zorder = true` (path mode, ≥2 cluster columns) switches the
+    * `zorder = true` (≥2 cluster columns) switches the
     * layout to a bit-interleaved z-order over `clusterBy`: files cover
     * disjoint z-ranges, so selective predicates on ANY of the cluster
     * columns — not just the leading one — skip files via the manifest's
     * per-file min/max stats (see [[scan]]).
     *
-    * `bloomBy` (path mode) records a per-file bloom filter over each
+    * `bloomBy` records a per-file bloom filter over each
     * named column: the point-lookup complement of min/max stats for
     * high-cardinality columns (ids, digests) where every file spans the
     * whole value space. An equality [[scan]] on a bloom column reads
@@ -686,81 +644,32 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def save(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil, zorder: Boolean = false,
       bloomBy: Seq[String] = Nil): DataFrame = {
-    require(!zorder || database.isEmpty, "zorder clustering is path-mode only")
     require(!zorder || clusterBy.size >= 2,
       "zorder needs at least two cluster columns (one column = linear clusterBy)")
-    require(bloomBy.isEmpty || database.isEmpty, "bloomBy is path-mode only")
     partitioning(name) = partitionBy
     schemas(name) = df.schema
     clustering(name) = clusterBy
     clusterKinds(name) = if (zorder) ZOrderKind else LinearKind
     bloomCols(name) = bloomBy
     val shaped = clustered(name, df, partitionBy)
-    database match {
-      case Some(db) =>
-        val w = shaped.write.mode("overwrite").format(format)
-          .option("header", "true") // no-op outside csv
-        val pw = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
-        pw.saveAsTable(s"$db.$name")
-        if (clusterBy.nonEmpty)
-          spark.sql(s"ALTER TABLE $db.$name SET TBLPROPERTIES" +
-            s"('$ClusterProp'='${clusterBy.mkString(",")}')")
-        analyze(db, name, columnStats = partitionBy.isEmpty)
-      case None =>
-        val files = stageWrite(name, shaped, partitionBy, mapCols = false)
-        // overwrite: new snapshot is the new files; the schema rides the
-        // SAME atomic commit so no crash window can separate data from
-        // its definition, and tableAt reads each version with the
-        // schema it was committed under. A full rewrite resets the
-        // rename/drop column mapping — the new files ARE the schema.
-        withCommitLock(name) {
-          commitManifest(name, files, Map(SchemaMeta -> df.schema.json,
-            PartsMeta -> partitionBy.mkString(","),
-            ClusterMeta -> clusterBy.mkString(","),
-            ClusterKindMeta -> clusterKinds(name),
-            BloomMeta -> bloomBy.mkString(","),
-            ColMapMeta -> "", DroppedMeta -> ""), op = "save")
-        }
-        // side meta is bootstrap redundancy for pre-manifest readers
-        writeMeta(name, partitionBy, df.schema, clusterBy, clusterKinds(name),
-          bloomBy)
+    val files = stageWrite(name, shaped, partitionBy, mapCols = false)
+    // overwrite: new snapshot is the new files; the schema rides the
+    // SAME atomic commit so no crash window can separate data from
+    // its definition, and tableAt reads each version with the
+    // schema it was committed under. A full rewrite resets the
+    // rename/drop column mapping — the new files ARE the schema.
+    withCommitLock(name) {
+      commitManifest(name, files, Map(SchemaMeta -> df.schema.json,
+        PartsMeta -> partitionBy.mkString(","),
+        ClusterMeta -> clusterBy.mkString(","),
+        ClusterKindMeta -> clusterKinds(name),
+        BloomMeta -> bloomBy.mkString(","),
+        ColMapMeta -> "", DroppedMeta -> ""), op = "save")
     }
+    // side meta is bootstrap redundancy for pre-manifest readers
+    writeMeta(name, partitionBy, df.schema, clusterBy, clusterKinds(name),
+      bloomBy)
     val back = read(name)
-    back.createOrReplaceTempView(s"dw_$name")
-    back
-  }
-
-  /** Bucketed CTAS — the co-located-join layout (catalog mode only:
-    * Spark bucketing lives in the session catalog's table metadata).
-    * Two tables bucketed on the same key with the same bucket count
-    * sort-merge join with ZERO exchanges: at 100 TB this turns the
-    * nightly fact-to-fact join from a full dual shuffle into a local
-    * per-bucket merge, the single biggest repeated-join saving the
-    * layout layer can buy. `sortBy` pre-sorts each bucket file so the
-    * merge side of the join skips its sort too.
-    *
-    * The frame is repartitioned by the bucket expression first —
-    * Spark's bucket assignment is the same Murmur3 hash partitioning
-    * repartition uses, so each task owns exactly its bucket and writes
-    * ONE file per bucket instead of up to `buckets` files per task
-    * (the classic bucketed-write small-file explosion). */
-  def saveBucketed(name: String, df: DataFrame, buckets: Int,
-      bucketCols: Seq[String], sortCols: Seq[String] = Nil): DataFrame = {
-    val db = database.getOrElse(throw new IllegalArgumentException(
-      "saveBucketed requires catalog mode (bucketing is catalog metadata)"))
-    require(buckets > 0, "saveBucketed: buckets must be positive")
-    require(bucketCols.nonEmpty, "saveBucketed: no bucket columns")
-    partitioning(name) = Nil
-    schemas(name) = df.schema
-    val shaped = df.repartition(buckets, bucketCols.map(col): _*)
-    val w = shaped.write.mode("overwrite").format(format)
-      .option("header", "true")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-    val sw =
-      if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
-    sw.saveAsTable(s"$db.$name")
-    analyze(db, name, columnStats = true)
-    val back = spark.table(s"$db.$name")
     back.createOrReplaceTempView(s"dw_$name")
     back
   }
@@ -769,38 +678,28 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * INSERT..SELECT `Olist DW.sql:71-75`). Parquet append is bulk and
     * atomic per task — the moral equivalent of TABLOCK fast load.
     *
-    * Path-mode schema evolution (add-column): a delta carrying NEW
+    * Schema evolution (add-column): a delta carrying NEW
     * columns widens the table schema in the same commit — existing
     * files simply lack the column and read as NULL (the columnar
     * add-column semantics of production table formats, no rewrite of
     * old data). Dropping or retyping columns is rejected loudly. */
-  def append(name: String, df: DataFrame): Unit = database match {
-    case Some(db) =>
-      // insertInto appends through the table definition (partition
-      // layout included) — positional, so align to the table's order
-      val target = spark.table(s"$db.$name")
-      clustered(name, df, partitionColsOf(name))
-        .select(target.columns.map(col): _*)
-        .write.mode("append").insertInto(s"$db.$name")
-      // keep CBO inputs fresh; dims (unpartitioned) refresh NDV too
-      analyze(db, name, columnStats = partitionColsOf(name).isEmpty)
-    case None =>
-      val parts = partitionColsOf(name)
-      val (aligned0, widened) = alignDelta(name, df, allowWiden = true)
-      val aligned = enforceChecks(name, aligned0)
-      val files = stageWrite(name, clustered(name, aligned, parts), parts)
-      withCommitLock(name) {
-        val old = currentManifest(name).map(_._2).getOrElse(Nil)
-        commitManifest(name, old ++ files,
-          widened.map(m => Map(SchemaMeta -> m.json)).getOrElse(Map.empty),
-          op = "append")
-      }
-      widened.foreach { merged =>
-        schemas(name) = merged
-        writeMeta(name, parts, merged, clusterColsOf(name), clusterKindOf(name),
-          bloomColsOf(name))
-      }
-      maybeAutoCompact(name, files.map(f => partitionPrefix(f.path)).toSet)
+  def append(name: String, df: DataFrame): Unit = {
+    val parts = partitionColsOf(name)
+    val (aligned0, widened) = alignDelta(name, df, allowWiden = true)
+    val aligned = enforceChecks(name, aligned0)
+    val files = stageWrite(name, clustered(name, aligned, parts), parts)
+    withCommitLock(name) {
+      val old = currentManifest(name).map(_._2).getOrElse(Nil)
+      commitManifest(name, old ++ files,
+        widened.map(m => Map(SchemaMeta -> m.json)).getOrElse(Map.empty),
+        op = "append")
+    }
+    widened.foreach { merged =>
+      schemas(name) = merged
+      writeMeta(name, parts, merged, clusterColsOf(name), clusterKindOf(name),
+        bloomColsOf(name))
+    }
+    maybeAutoCompact(name, files.map(f => partitionPrefix(f.path)).toSet)
   }
 
   /** Opt-in small-file auto-compaction (the production "auto optimize"
@@ -888,7 +787,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * column's physical name (stale data exists in old files), not
     * another column's physical name. */
   def renameColumn(name: String, from: String, to: String): Unit = {
-    require(database.isEmpty, "renameColumn applies to path-mode tables only")
     require(from != to, s"renameColumn: $from -> $to is a no-op")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
@@ -928,7 +826,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * the same name. Same layout-column refusals as [[renameColumn]];
     * version-pinned like everything else in the manifest. */
   def dropColumn(name: String, colName: String): Unit = {
-    require(database.isEmpty, "dropColumn applies to path-mode tables only")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
         case Some((_, fs, m)) => (fs, m)
@@ -982,7 +879,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * so only parquet/csv/json tables widen. */
   def widenColumn(name: String, colName: String,
       to: org.apache.spark.sql.types.DataType): Unit = {
-    require(database.isEmpty, "widenColumn applies to path-mode tables only")
     require(format != "orc",
       "widenColumn: the ORC reader does not promote types on read")
     withCommitLock(name) {
@@ -1035,9 +931,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * names would be written under the frozen PHYSICAL name while the
     * caller filters by the logical one. */
   def repartitionTable(name: String, newPartitionBy: Seq[String]): Unit = {
-    require(database.isEmpty,
-      "repartitionTable applies to path-mode tables only " +
-        "(catalog-mode layout belongs to the session catalog)")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
         case Some((_, fs, m)) => (fs, m)
@@ -1084,7 +977,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         s"${referencing.map(_.name).mkString(", ")} — drop them first")
   }
 
-  /** Declare a row-level CHECK constraint on a path-mode table,
+  /** Declare a row-level CHECK constraint on a table,
     * enforced on every [[append]] (the fast-load path — reference: the
     * SSIS data flow's per-column `errorRowDisposition`,
     * `Package.dtsx:61,227,349`, which is exactly this knob: FailComponent
@@ -1113,7 +1006,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * load boundary is the append path, as in the reference. */
   def addCheck(name: String, check: String, exprSql: String,
       onViolation: String = "fail"): Unit = {
-    require(database.isEmpty, "checks apply to path-mode tables only")
     require(Seq("fail", "drop", "quarantine").contains(onViolation),
       s"addCheck: unknown disposition '$onViolation'")
     require(check.nonEmpty && !check.contains(":") && !check.contains("\n"),
@@ -1141,7 +1033,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
 
   /** Remove a declared check (op `alter-check` in the audit trail). */
   def dropCheck(name: String, check: String): Unit = {
-    require(database.isEmpty, "checks apply to path-mode tables only")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
         case Some((_, fs, m)) => (fs, m)
@@ -1251,7 +1142,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     }
   }
 
-  /** Validates a path-mode delta against the table's recorded schema
+  /** Validates a delta against the table's recorded schema
     * and returns it column-aligned to the recorded order (csv maps
     * columns positionally on read; json/orc get one canonical layout).
     * With `allowWiden`, NEW columns extend the schema at the end
@@ -1344,49 +1235,32 @@ class Warehouse(val spark: SparkSession, basePath: String,
         .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
 
   /** The table's partition columns as a NEW Warehouse instance over an
-    * existing store must see them: from the session catalog in database
-    * mode (the catalog IS the metadata there — `_graft_meta` is never
-    * written), from the persisted meta files otherwise. */
+    * existing store must see them: from the persisted meta files. */
   private def partitionColsOf(name: String): Seq[String] =
-    partitioning.getOrElseUpdate(name, database match {
-      case Some(db) =>
-        spark.catalog.listColumns(s"$db.$name").collect()
-          .filter(_.isPartition).map(_.name).toSeq
-      case None => loadMeta(name)._1
-    })
+    partitioning.getOrElseUpdate(name, loadMeta(name)._1)
 
   /** Partition-scoped overwrite: replace ONLY the partitions present in
     * `df`, leaving every other partition's files physically untouched
-    * (`partitionOverwriteMode=dynamic`). This is what makes the
-    * date-grain upsert a bounded rewrite instead of a full-table one —
-    * at 100 TB a daily delta touches one `year=` directory, not the
-    * table. */
+    * (Spark's `partitionOverwriteMode=dynamic` semantics). This is what
+    * makes the date-grain upsert a bounded rewrite instead of a
+    * full-table one — at 100 TB a daily delta touches one `year=`
+    * directory, not the table. */
   def overwritePartitions(name: String, df: DataFrame): Unit = {
     val parts = partitionColsOf(name)
     require(parts.nonEmpty, s"overwritePartitions: $name is not partitioned")
-    database match {
-      case Some(db) => withDynamicOverwrite {
-        // insertInto is positional — align to the table's column order
-        val target = spark.table(s"$db.$name")
-        df.select(target.columns.map(col): _*)
-          .write.mode("overwrite").format(format).insertInto(s"$db.$name")
-        analyze(db, name, columnStats = false)
-      }
-      case None =>
-        // manifest-level dynamic overwrite: the new snapshot keeps every
-        // file OUTSIDE the partitions present in the delta and swaps in
-        // the delta's files — untouched partitions' files are not even
-        // listed, let alone rewritten, and the swap is atomic
-        requireUniformLayout("overwritePartitions", name,
-          currentManifest(name).map(_._2).getOrElse(Nil))
-        val (aligned, _) = alignDelta(name, df, allowWiden = false)
-        val files = stageWrite(name, clustered(name, aligned, parts), parts)
-        val touched = files.map(f => partitionPrefix(f.path)).toSet
-        withCommitLock(name) {
-          val kept = currentManifest(name).map(_._2).getOrElse(Nil)
-            .filterNot(f => touched.contains(partitionPrefix(f.path)))
-          commitManifest(name, kept ++ files, op = "overwrite-partitions")
-        }
+    // manifest-level dynamic overwrite: the new snapshot keeps every
+    // file OUTSIDE the partitions present in the delta and swaps in
+    // the delta's files — untouched partitions' files are not even
+    // listed, let alone rewritten, and the swap is atomic
+    requireUniformLayout("overwritePartitions", name,
+      currentManifest(name).map(_._2).getOrElse(Nil))
+    val (aligned, _) = alignDelta(name, df, allowWiden = false)
+    val files = stageWrite(name, clustered(name, aligned, parts), parts)
+    val touched = files.map(f => partitionPrefix(f.path)).toSet
+    withCommitLock(name) {
+      val kept = currentManifest(name).map(_._2).getOrElse(Nil)
+        .filterNot(f => touched.contains(partitionPrefix(f.path)))
+      commitManifest(name, kept ++ files, op = "overwrite-partitions")
     }
   }
 
@@ -1395,7 +1269,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
   private def partitionPrefix(rel: String): String =
     rel.substring(0, rel.lastIndexOf('/') + 1)
 
-  /** Row-level MERGE (the Delta-style upsert) for path-mode partitioned
+  /** Row-level MERGE (the Delta-style upsert) for partitioned
     * tables: delta rows REPLACE target rows carrying the same key —
     * wherever they live — and new keys are inserted. Only partitions
     * that hold delta rows or matched keys are rewritten; everything
@@ -1433,7 +1307,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
       Some((markKey, batchId)))
   }
 
-  /** Drive a streaming DataFrame of upserts into a path-mode
+  /** Drive a streaming DataFrame of upserts into a
     * partitioned table: the continuous CDC-apply shape (stream of
     * latest-state rows keyed by `keys`), exactly-once via
     * [[mergeStreamBatch]]. The stream must emit at most one row per key
@@ -1452,7 +1326,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
 
   private def mergeImpl(name: String, delta: DataFrame, keys: Seq[String],
       extraMeta: Map[String, String], mark: Option[(String, Long)]): Boolean = {
-    require(database.isEmpty, "merge applies to path-mode tables only")
     val parts = partitionColsOf(name)
     require(parts.nonEmpty, s"merge: $name is not partitioned")
     require(keys.nonEmpty, "merge needs at least one key column")
@@ -1708,7 +1581,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * A no-match delete leaves the table version unchanged (no commit). */
   def delete(name: String, predicate: org.apache.spark.sql.Column,
       hint: Seq[ColRange] = Nil): Warehouse.DeleteResult = {
-    require(database.isEmpty, "delete applies to path-mode tables only")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
         case Some((_, fs, m)) => (fs, m)
@@ -1949,7 +1821,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def update(name: String, predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       hint: Seq[ColRange] = Nil): Warehouse.UpdateResult = {
-    require(database.isEmpty, "update applies to path-mode tables only")
     require(assignments.nonEmpty, "update: no assignments")
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
@@ -2074,7 +1945,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * streaming source stays file-level (insert-only) by design. */
   def tableChangesRows(name: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
-    require(database.isEmpty, "tableChangesRows applies to path-mode tables only")
     require(fromVersion <= toVersion,
       s"tableChangesRows: fromVersion $fromVersion > toVersion $toVersion")
     val fs = metaFs
@@ -2148,17 +2018,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     else out.reduce(_ unionByName _)
   }
 
-  private def withDynamicOverwrite[T](f: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Small-files compaction (the OPTIMIZE of a plain-Parquet warehouse):
     * incremental appends accumulate one file per task per run, and at
     * cluster scale the file-listing + task-scheduling overhead of ten
@@ -2166,58 +2025,34 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * partitioned table into ≤ `filesPerPartition` files, or an
     * unpartitioned table into that many files total.
     *
-    * Path mode is snapshot-consistent: the rewrite lands as new data
+    * The rewrite is snapshot-consistent: it lands as new data
     * files and one atomic manifest swap, so a concurrent reader sees
     * the pre-compaction snapshot or the post-compaction one, never a
     * partial listing (and readers pinned to the old manifest keep
     * working — superseded files survive until [[vacuum]]). Exclusive
     * WRITER access is still the contract: rows appended between the
-    * snapshot read and the commit would be dropped by the replace.
-    * Catalog mode rewrites through insertInto (the session catalog owns
-    * that layout); it keeps the weaker exclusive-access contract. */
+    * snapshot read and the commit would be dropped by the replace. */
   def compact(name: String, filesPerPartition: Int = 1): Unit = {
     val parts = partitionColsOf(name)
     val n = math.max(filesPerPartition, 1)
-    database match {
-      case Some(db) =>
-        val snapshot = read(name).localCheckpoint()
-        val target = spark.table(s"$db.$name")
-        val shaped =
-          if (parts.nonEmpty) {
-            // the dynamic-partition writer emits one file per (task,
-            // partition value): repartitioning by the partition columns
-            // alone → 1 file per partition; a row-hash splitter only
-            // when more are wanted
-            val byPart =
-              if (n == 1) snapshot.repartition(parts.map(col): _*)
-              else snapshot.repartition((parts.map(col) :+
-                pmod(hash(snapshot.columns.map(col): _*), lit(n))): _*)
-            byPart
-          } else snapshot.coalesce(n)
-        withDynamicOverwrite {
-          clustered(name, shaped, parts).select(target.columns.map(col): _*)
-            .write.mode("overwrite").format(format).insertInto(s"$db.$name")
-        }
-        analyze(db, name, columnStats = parts.isEmpty)
-      case None => withCommitLock(name) {
-        // the whole snapshot-rewrite-commit holds the table's commit
-        // lock: the kept rows derive from the same manifest the replace
-        // supersedes, so an in-JVM concurrent append can't land between
-        // the snapshot read and the commit and be erased. The manifest
-        // pins the snapshot's exact file list and nothing below deletes
-        // data files — the lazy read is safe to rewrite from.
-        val snapshot = read(name)
-        val shaped =
-          if (parts.nonEmpty) {
-            if (n == 1) snapshot.repartition(parts.map(col): _*)
-            else snapshot.repartition((parts.map(col) :+
-              pmod(hash(snapshot.columns.map(col): _*), lit(n))): _*)
-          } else snapshot.coalesce(n)
-        // clustering is table layout: compaction must re-establish it
-        val files = stageWrite(name, clustered(name, shaped, parts), parts)
-        // full replace: the snapshot covers the table
-        commitManifest(name, files, op = "compact")
-      }
+    withCommitLock(name) {
+      // the whole snapshot-rewrite-commit holds the table's commit
+      // lock: the kept rows derive from the same manifest the replace
+      // supersedes, so an in-JVM concurrent append can't land between
+      // the snapshot read and the commit and be erased. The manifest
+      // pins the snapshot's exact file list and nothing below deletes
+      // data files — the lazy read is safe to rewrite from.
+      val snapshot = read(name)
+      val shaped =
+        if (parts.nonEmpty) {
+          if (n == 1) snapshot.repartition(parts.map(col): _*)
+          else snapshot.repartition((parts.map(col) :+
+            pmod(hash(snapshot.columns.map(col): _*), lit(n))): _*)
+        } else snapshot.coalesce(n)
+      // clustering is table layout: compaction must re-establish it
+      val files = stageWrite(name, clustered(name, shaped, parts), parts)
+      // full replace: the snapshot covers the table
+      commitManifest(name, files, op = "compact")
     }
   }
 
@@ -2241,7 +2076,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * under the commit lock. */
   def compactSmall(name: String, targetRows: Long,
       minFileRows: Long): Warehouse.CompactResult = {
-    require(database.isEmpty, "compactSmall applies to path-mode tables only")
     require(minFileRows > 0 && targetRows >= minFileRows,
       s"compactSmall: need 0 < minFileRows ≤ targetRows")
     val parts = partitionColsOf(name)
@@ -2299,7 +2133,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * matched partitions' rows are read and rewritten. */
   def compactWhere(name: String, partitionPredicate: org.apache.spark.sql.Column,
       filesPerPartition: Int = 1): Warehouse.CompactResult = {
-    require(database.isEmpty, "compactWhere applies to path-mode tables only")
     val parts = partitionColsOf(name)
     require(parts.nonEmpty,
       s"compactWhere: $name is not partitioned (use compact)")
@@ -2457,7 +2290,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * commit gap — `lockStaleMs` is a sound default on a live table;
     * the zero default matches single-writer maintenance windows. */
   def vacuum(name: String, graceMs: Long, keepVersions: Int): Unit = {
-    require(database.isEmpty, "vacuum applies to path-mode tables only")
     require(keepVersions >= 1, "vacuum must keep at least the current version")
     val fs = metaFs
     currentManifest(name).foreach { _ =>
@@ -2552,38 +2384,23 @@ class Warehouse(val spark: SparkSession, basePath: String,
     }
   }
 
-  /** Table-level stats (rowCount + sizeInBytes) after every write;
-    * per-column NDV/min/max on the broadcast-sized dims — the inputs
-    * the cost-based optimizer uses for join reordering and broadcast
-    * decisions. Facts skip column stats (a full-column scan per build
-    * would dominate at 100 TB; the table-level row count is what AQE
-    * and the broadcast threshold need). */
-  private def analyze(db: String, name: String, columnStats: Boolean): Unit = {
-    spark.sql(s"ANALYZE TABLE $db.$name COMPUTE STATISTICS")
-    if (columnStats)
-      spark.sql(s"ANALYZE TABLE $db.$name COMPUTE STATISTICS FOR ALL COLUMNS")
-  }
-
   /** Schema recorded at save time — json/csv don't self-describe. */
   private val schemas = scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
-  private def read(name: String): DataFrame = database match {
-    case Some(db) => spark.table(s"$db.$name")
-    case None =>
-      currentManifestFull(name) match {
-        case Some((_, files, meta)) =>
-          // the committed schema wins — it versioned atomically with
-          // the data (cache/side meta are bootstrap fallbacks)
-          val sc = metaSchema(meta).getOrElse(schemas.getOrElseUpdate(name,
-            loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil))))
-          fromFiles(name, files.map(_.path), sc)
-        case None => // pre-manifest store layout (or foreign directory)
-          val sc = schemas.getOrElseUpdate(name,
-            loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil)))
-          val r = spark.read.format(format).option("header", "true")
-          (if (sc.isEmpty) r else r.schema(sc)).load(s"$basePath/$name")
-      }
-  }
+  private def read(name: String): DataFrame =
+    currentManifestFull(name) match {
+      case Some((_, files, meta)) =>
+        // the committed schema wins — it versioned atomically with
+        // the data (cache/side meta are bootstrap fallbacks)
+        val sc = metaSchema(meta).getOrElse(schemas.getOrElseUpdate(name,
+          loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil))))
+        fromFiles(name, files.map(_.path), sc)
+      case None => // pre-manifest store layout (or foreign directory)
+        val sc = schemas.getOrElseUpdate(name,
+          loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil)))
+        val r = spark.read.format(format).option("header", "true")
+        (if (sc.isEmpty) r else r.schema(sc)).load(s"$basePath/$name")
+    }
 
   /** Snapshot reader over an explicit committed file list, resolved at
     * DataFrame creation — concurrent commits can't change or truncate
@@ -2890,7 +2707,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * rewrites needs change files written at commit time (the production
     * table-format approach), intentionally out of scope. */
   def tableChanges(name: String, fromVersion: Long, toVersion: Long): DataFrame = {
-    require(database.isEmpty, "tableChanges applies to path-mode tables only")
     require(fromVersion <= toVersion,
       s"tableChanges: fromVersion $fromVersion > toVersion $toVersion")
     val appendOps = Set("append", "stream-append", "stream-merge", "merge")
@@ -2946,7 +2762,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * process. */
   def consumeChanges(name: String, stateDir: String)
       (f: DataFrame => Unit): Option[(Long, Long)] = {
-    require(database.isEmpty, "consumeChanges applies to path-mode tables only")
     val fs = metaFs
     val stateFile = new org.apache.hadoop.fs.Path(stateDir, s"$name.version")
     val last: Long =
@@ -2980,7 +2795,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * pass the current head for changes-from-now. */
   def readChangeStream(name: String, startingVersion: Long = 0L,
       maxVersionsPerTrigger: Option[Long] = None): DataFrame = {
-    require(database.isEmpty, "readChangeStream applies to path-mode tables only")
     val r = spark.readStream
       .format(classOf[graft.streaming.ChangeFeedProvider].getName)
       .option("path", basePath)
@@ -3000,8 +2814,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * save-over) refuse the stream. */
   def readRowChangeStream(name: String, startingVersion: Long = 0L,
       maxVersionsPerTrigger: Option[Long] = None): DataFrame = {
-    require(database.isEmpty,
-      "readRowChangeStream applies to path-mode tables only")
     val r = spark.readStream
       .format(classOf[graft.streaming.ChangeFeedProvider].getName)
       .option("path", basePath)
@@ -3048,7 +2860,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def refreshAggregate(base: String, mv: String, keys: Seq[String],
       sums: Seq[String] = Nil, full: Boolean = false,
       bootstrapFiles: Int = 0): Warehouse.MvRefresh = {
-    require(database.isEmpty, "refreshAggregate applies to path-mode tables only")
     require(keys.nonEmpty, "refreshAggregate needs at least one key column")
     val baseSc = tableSchema(base)
     (keys ++ sums).foreach(c => require(baseSc.fieldNames.contains(c),
@@ -3201,7 +3012,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def refreshJoinView(fact: String, dim: String, mv: String,
       joinKeys: Seq[String], factId: String,
       full: Boolean = false, bootstrapFiles: Int = 0): Warehouse.JoinMvRefresh = {
-    require(database.isEmpty, "refreshJoinView applies to path-mode tables only")
     require(joinKeys.nonEmpty, "refreshJoinView needs join key columns")
     val factSc = tableSchema(fact)
     val dimSc = tableSchema(dim)
@@ -3390,7 +3200,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def recluster(name: String, clusterBy: Seq[String],
       zorder: Boolean = false, bloomBy: Seq[String] = Nil,
       filesPerPartition: Int = 1): Unit = {
-    require(database.isEmpty, "recluster applies to path-mode tables only")
     require(!zorder || clusterBy.size >= 2,
       "zorder needs at least two cluster columns")
     clustering(name) = clusterBy
@@ -3429,13 +3238,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
       clusterKinds(name), bloomBy)
   }
 
-  /** Commit history of a path-mode table, ascending — the DESCRIBE
+  /** Commit history of a table, ascending — the DESCRIBE
     * HISTORY audit trail: which operation produced each version, when,
     * and how many data files the snapshot holds. Reads each version's
     * own manifest (op/timestamp overwrite per commit, so every manifest
     * records what created it). Pre-history manifests report "unknown". */
   def history(name: String): Seq[Warehouse.Commit] = {
-    require(database.isEmpty, "history applies to path-mode tables only")
     tableVersions(name).map { v =>
       // one meta-block read per version; replay only for pre-FilesMeta
       // records (older logs)
@@ -3448,13 +3256,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
     }
   }
 
-  /** Committed versions of a path-mode table, ascending. Versions
+  /** Committed versions of a table, ascending. Versions
     * committed by a cross-table [[transaction]] whose parent marker has
     * not landed are not committed yet — the (bounded) tagged tail is
     * hidden, so time travel and the change feeds can never resolve a
     * half-landed batch. */
   def tableVersions(name: String): Seq[Long] = {
-    require(database.isEmpty, "tableVersions applies to path-mode tables only")
     val all = logVersions(name)
     var end = all.length
     while (end > 0 && metaOfVersion(name, all(end - 1)).get(TxnMeta)
@@ -3467,7 +3274,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * — the audit/debug/reproducibility read a training-data pipeline
     * needs ("which snapshot did run X train on?"). */
   def tableAt(name: String, version: Long): DataFrame = {
-    require(database.isEmpty, "tableAt applies to path-mode tables only")
     // a version vacuum reaped must fail HERE with the real diagnosis,
     // not as a missing-record parse error (or worse, resolve through
     // a stale chain): a held-but-unpinned serving cut re-resolving
@@ -3520,7 +3326,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * the seam [[holdSnapshot]] needs the raw versions through. */
   def snapshotVersions(names: Seq[String],
       maxRetries: Int = 10): Map[String, Long] = {
-    require(database.isEmpty, "snapshotTables applies to path-mode tables only")
     require(names.nonEmpty, "snapshotTables: no tables")
     def heads(): Seq[(String, Long)] =
       names.map(n => n -> tableVersions(n).lastOption.getOrElse(
@@ -3592,7 +3397,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * off retention cannot be resurrected by pinning. */
   def pinVersion(name: String, version: Long, holder: String,
       leaseMs: Option[Long] = None): Unit = {
-    require(database.isEmpty, "pinVersion applies to path-mode tables only")
     require(holder.nonEmpty &&
       !holder.exists(c => c == ',' || c == '=' || c == ':'),
       s"pinVersion: holder '$holder' must be non-empty without " +
@@ -3624,7 +3428,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * and a vacuum swept the cut (re-resolve and re-hold; the cut's
     * files may already be reclaimed). */
   def refreshPin(name: String, holder: String): Unit = {
-    require(database.isEmpty, "refreshPin applies to path-mode tables only")
     withCommitLock(name) {
       val (_, fs0, _) = currentManifestFull(name).getOrElse(
         throw new IllegalArgumentException(
@@ -3645,7 +3448,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
 
   /** Release `holder`'s pin on `name` (no-op when none is held). */
   def unpinVersion(name: String, holder: String): Unit = {
-    require(database.isEmpty, "unpinVersion applies to path-mode tables only")
     withCommitLock(name) {
       currentManifestFull(name).foreach { case (_, fs0, _) =>
         val pins = pinDetails(name)
@@ -3740,8 +3542,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * policy, as everywhere). */
   def snapshotTablesAt(names: Seq[String],
       ts: java.time.Instant): Map[String, DataFrame] = {
-    require(database.isEmpty,
-      "snapshotTablesAt applies to path-mode tables only")
     require(names.nonEmpty, "snapshotTablesAt: no tables")
     // ONE meta-block read per retained version per table: the same
     // pass collects the commit stamp (for the time resolution) and
@@ -3859,7 +3659,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * after `ts` exist but are not visible; a `ts` before the first
     * commit refuses. */
   def tableAtTime(name: String, ts: java.time.Instant): DataFrame = {
-    require(database.isEmpty, "tableAtTime applies to path-mode tables only")
     val versions = tableVersions(name)
     require(versions.nonEmpty, s"tableAtTime: $name has no committed snapshot")
     val at = versions.reverse.find { v =>
@@ -3912,7 +3711,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * table. SQL: `AUDIT TABLE t [DEEP]`. */
   def audit(name: String, deep: Boolean = false,
       graceMs: Long = 0L): DataFrame = {
-    require(database.isEmpty, "audit applies to path-mode tables only")
     import spark.implicits._
     val fs = metaFs
     val out = scala.collection.mutable.ArrayBuffer
@@ -4150,7 +3948,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * floor. The safety review before a destructive sweep. */
   def vacuumPreview(name: String, graceMs: Long = 0L,
       keepVersions: Int = 1): Seq[String] = {
-    require(database.isEmpty, "vacuumPreview applies to path-mode tables only")
     require(keepVersions >= 1, "vacuum must keep at least the current version")
     val fs = metaFs
     currentManifest(name) match {
@@ -4192,7 +3989,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * resurrected from the past. The undo button the time-travel read
     * implies. */
   def restore(name: String, version: Long): Unit = {
-    require(database.isEmpty, "restore applies to path-mode tables only")
     val (files, vMeta) = stateAt(name, version)
     requireVisible("restore", name, version, vMeta)
     require(vMeta.contains(SchemaMeta) && vMeta.contains(PartsMeta),
@@ -4235,7 +4031,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         restoredBloom.getOrElse(Nil))
   }
 
-  /** Drop a path-mode table: data directory, manifest log, change
+  /** Drop a table: data directory, manifest log, change
     * files, and side meta, gone in that order (manifests last, so a
     * concurrent reader that already resolved the head either reads a
     * complete snapshot or fails loudly — never a silent partial one).
@@ -4245,7 +4041,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * clones first — `compact` materializes); a clone itself drops
     * freely, its references die with it. */
   def dropTable(name: String): Unit = {
-    require(database.isEmpty, "dropTable applies to path-mode tables only")
     withCommitLock(name) {
       val fs = metaFs
       val holdouts = currentManifestFull(name).toSeq
@@ -4309,7 +4104,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * any current file predates row-count stats (then a scan is the
     * only honest answer). */
   def countRows(name: String): Option[Long] = {
-    require(database.isEmpty, "countRows applies to path-mode tables only")
     val files = currentManifest(name).map(_._2).getOrElse(
       throw new IllegalArgumentException(
         s"countRows: $name has no committed snapshot"))
@@ -4375,7 +4169,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def statsAggregate(name: String, cols0: Seq[String],
       withSums: Boolean = false, withAvgs: Boolean = false)
       : Option[DataFrame] = {
-    require(database.isEmpty, "statsAggregate applies to path-mode tables only")
     val cols = cols0.distinct // duplicate requests would collide column names
     require(cols.nonEmpty, "statsAggregate: no columns requested")
     val (_, files, meta) = currentManifestFull(name).getOrElse(
@@ -4526,8 +4319,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
   private[graft] def metadataAggSnapshot(name: String)
       : Option[(Seq[Warehouse.DataFile],
           Map[String, org.apache.spark.sql.types.DataType], Seq[String])] =
-    if (database.nonEmpty) None
-    else currentManifestFull(name).flatMap { case (_, files, meta) =>
+    currentManifestFull(name).flatMap { case (_, files, meta) =>
       // manifest stats key PHYSICAL column names; after a rename or a
       // drop-and-re-add, a logical name could silently hit a DIFFERENT
       // column's stats — any column mapping disqualifies the fold
@@ -4719,7 +4511,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def statsAggregateBy(name: String, groupCols: Seq[String],
       cols0: Seq[String], withSums: Boolean = false,
       withAvgs: Boolean = false): Option[DataFrame] = {
-    require(database.isEmpty, "statsAggregateBy applies to path-mode tables only")
     val cols = cols0.distinct
     require(groupCols.nonEmpty && cols.nonEmpty,
       "statsAggregateBy: empty group or aggregate column list")
@@ -4842,7 +4633,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * columns), declared checks, registered clones, and the tracked MV
     * source if this table is one. Ordered key→value pairs. */
   def describeDetail(name: String): Seq[(String, String)] = {
-    require(database.isEmpty, "describeDetail applies to path-mode tables only")
     val (version, files, meta) = currentManifestFull(name).getOrElse(
       throw new IllegalArgumentException(
         s"describeDetail: $name has no committed snapshot"))
@@ -4866,10 +4656,9 @@ class Warehouse(val spark: SparkSession, basePath: String,
       "lastCommittedAt" -> meta.getOrElse(TimeMeta, ""))
   }
 
-  /** True when `name` has a committed path-mode snapshot here (the
-    * predicate the SQL command surface uses to decide binding). */
-  def hasTable(name: String): Boolean =
-    database.isEmpty && currentManifest(name).nonEmpty
+  /** True when `name` has a committed snapshot here (the predicate
+    * the SQL command surface uses to decide binding). */
+  def hasTable(name: String): Boolean = currentManifest(name).nonEmpty
 
   /** Re-point this session's `dw_<name>` view at the CURRENT committed
     * snapshot (SQL: `REFRESH TABLE name`). Commits made through this
@@ -4911,7 +4700,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * it, and registers on every owner. */
   def cloneTable(src: String, dst: String,
       version: Option[Long] = None): Unit = {
-    require(database.isEmpty, "cloneTable applies to path-mode tables only")
     require(src != dst, "cloneTable: src and dst are the same table")
     val v = version.getOrElse(currentManifest(src).map(_._1).getOrElse(
       throw new IllegalArgumentException(
@@ -4976,7 +4764,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     read(dst).createOrReplaceTempView(s"dw_$dst")
   }
 
-  /** Exactly-once streaming micro-batch append (path mode). Structured
+  /** Exactly-once streaming micro-batch append. Structured
     * Streaming's foreachBatch is at-least-once: after a failure between
     * the sink write and the checkpoint advance, the same batchId is
     * REPLAYED. Committing the batch and its id in one atomic manifest
@@ -5003,7 +4791,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
 
   def appendStreamBatch(name: String, df: DataFrame, batchId: Long,
       streamId: String = "stream"): Boolean = {
-    require(database.isEmpty, "appendStreamBatch applies to path-mode tables only")
     val markKey = s"watermark.$streamId"
     val check = currentManifestFull(name).flatMap(_._3.get(markKey)).map(_.toLong)
     if (check.contains(batchId)) false // replay of the last committed batch
@@ -5030,7 +4817,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     }
   }
 
-  /** Drive a streaming DataFrame into a path-mode table with
+  /** Drive a streaming DataFrame into a table with
     * exactly-once rows via [[appendStreamBatch]].
     *
     * Interaction with open [[transaction]]s — REFUSE, never defer: a
@@ -5076,7 +4863,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
       }
       .start()
 
-  // ----- version-manifest commit log (path mode) --------------------
+  // ----- version-manifest commit log ------------------------------
   //
   // The minimal transactional core of a table format: a table's current
   // snapshot is an immutable LIST OF FILES named by a manifest; writers
@@ -5227,8 +5014,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   private val ZOrderKind = "zorder"
   /** Reserved column name carrying the transient z-value during writes. */
   private val ZCol = "_graft_zvalue"
-  /** Catalog-mode home of the cluster spec (table property). */
-  private val ClusterProp = "graft.clusterBy"
 
   private def txnDir(name: String) =
     new org.apache.hadoop.fs.Path(s"$basePath/_graft_meta/txn/$name")
@@ -5972,7 +5757,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * query on a clustered column touches a few files out of tens of
     * thousands without any index structure. */
   def scan(name: String, ranges: ColRange*): DataFrame = {
-    require(database.isEmpty, "scan applies to path-mode tables only")
     val df = currentManifestFull(name) match {
       case Some((_, files, meta)) =>
         val sc = metaSchema(meta).getOrElse(tableSchema(name))
@@ -5997,7 +5781,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * the same read a full scan would do. */
   def pruningPreviewFor(name: String,
       predicate: org.apache.spark.sql.Column): (Int, Int) = {
-    require(database.isEmpty, "pruningPreviewFor is path-mode only")
     currentManifestFull(name) match {
       case Some((_, files, meta)) =>
         val sc = metaSchema(meta).getOrElse(tableSchema(name))
@@ -6009,7 +5792,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   }
 
   def scanFileCounts(name: String, ranges: Seq[ColRange]): (Int, Int) = {
-    require(database.isEmpty, "scanFileCounts applies to path-mode tables only")
     currentManifestFull(name) match {
       case Some((_, files, meta)) =>
         val sc = metaSchema(meta).getOrElse(tableSchema(name))
@@ -6026,7 +5808,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * [[compactWhere]] folds the sidecars away and restores clean
     * scans — without rewriting the rest of the table. */
   def dvScanStats(name: String, ranges: Seq[ColRange] = Nil): (Int, Int, Long) = {
-    require(database.isEmpty, "dvScanStats applies to path-mode tables only")
     currentManifestFull(name) match {
       case Some((_, files, meta)) =>
         val sc = metaSchema(meta).getOrElse(tableSchema(name))

@@ -524,15 +524,6 @@ object Similarity {
       .limit(topK)
   }
 
-  /** The r17-and-earlier HOF ADC fold — parity oracle ONLY
-    * (DecimalFoldParitySpec pins [[VectorFunctions.adcScore]] to it). */
-  private[graft] def adcScoreHof(codes: Column, tbl: Column,
-      m: Int, k: Int): Column =
-    aggregate(
-      zip_with(codes, sequence(lit(0), lit(m - 1)),
-        (c, s0) => element_at(tbl, s0 * k + c.cast("int") + 1)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** IVF-PQ — the production ANN composition (e7's coarse cells ×
     * e12's product-quantized ranking): a coarse quantizer restricts
     * the search to the query's cell, ADC table lookups over STORED

@@ -87,30 +87,6 @@ object GraftSqlParser {
       name: String): Option[graft.olist.Warehouse] =
     Option(registry.get(session)).filter(_.hasTable(name))
 
-  /** Pin ops are a PATH-MODE surface (the vacuum shield rides the
-    * version manifest; a catalog-mode table has no manifest and no
-    * graft vacuum to shield against) — refuse with the real diagnosis
-    * instead of pinVersion's generic require. */
-  private def requirePathMode(wh: graft.olist.Warehouse,
-      stmt: String): Unit =
-    require(wh.isPathMode,
-      s"$stmt: pin operations apply to path-mode tables only — a " +
-        "catalog-mode table commits through the session catalog, has " +
-        "no version manifest, and is never swept by the graft vacuum, " +
-        "so there is nothing for a pin to shield; use the catalog's " +
-        "own retention controls")
-
-  /** Binding for PIN/UNPIN/DESCRIBE PINS: a path-mode warehouse binds
-    * through the named table as usual; a CATALOG-MODE warehouse binds
-    * unconditionally — `hasTable` is false there by construction, so
-    * without this the statement would fall through to Spark's grammar
-    * and die as a PARSE_SYNTAX_ERROR instead of [[requirePathMode]]'s
-    * diagnosis. */
-  private def boundPinTarget(session: SparkSession,
-      name: String): Option[graft.olist.Warehouse] =
-    Option(registry.get(session))
-      .filter(wh => wh.hasTable(name) || !wh.isPathMode)
-
   /** The session's bound warehouse, if any — the lookup
     * [[MetadataAggRewrite]] resolves `dw_<t>` views through. */
   private[plans] def boundFor(
@@ -1209,43 +1185,34 @@ object GraftSqlParser {
           }
         }
       case Pin(table, version, holder, lease) =>
-        boundPinTarget(session, table).map { wh =>
+        boundTable(session, table).map { wh =>
           cmd(session, attrs("status" -> StringType)) { _ =>
-            requirePathMode(wh, s"PIN TABLE $table")
             wh.pinVersion(table, version.toLong, holder,
               Option(lease).map(_.toLong))
             Seq(Row("OK"))
           }
         }
       case Unpin(table, holder) =>
-        boundPinTarget(session, table).map { wh =>
+        boundTable(session, table).map { wh =>
           cmd(session, attrs("status" -> StringType)) { _ =>
-            requirePathMode(wh, s"UNPIN TABLE $table")
             wh.unpinVersion(table, holder)
             Seq(Row("OK"))
           }
         }
       case Audit(table, deep) =>
-        boundPinTarget(session, table).map { wh =>
+        boundTable(session, table).map { wh =>
           cmd(session, attrs("check" -> StringType,
               "status" -> StringType, "subject" -> StringType,
               "detail" -> StringType)) { _ =>
-            require(wh.isPathMode,
-              s"AUDIT TABLE $table: a catalog-mode table commits " +
-                "through the session catalog and has no version " +
-                "manifest — the fsck checks the disk against the " +
-                "manifest log; use the catalog's own consistency " +
-                "tooling")
             wh.audit(table, deep = deep != null).collect().toSeq
           }
         }
       case DescPins(table) =>
-        boundPinTarget(session, table).map { wh =>
+        boundTable(session, table).map { wh =>
           cmd(session, attrs("holder" -> StringType,
               "version" -> org.apache.spark.sql.types.LongType,
               "pinned_at" -> StringType, "age_ms" -> LongType,
               "lease_ms" -> LongType, "expired" -> StringType)) { _ =>
-            requirePathMode(wh, s"DESCRIBE PINS $table")
             val now = System.currentTimeMillis
             wh.pinDetails(table).sortBy(_.holder).map { p =>
               Row(p.holder, p.version,

@@ -118,7 +118,7 @@ class ChangeFeedSource(wh: Warehouse, table: String,
 
 /** `spark.readStream.format("graft-changes")` provider. Options:
   *  - `path`  (required): the warehouse basePath
-  *  - `table` (required): the path-mode table name
+  *  - `table` (required): the table name
   *  - `startingVersion` (default 0): exclusive version to start after —
   *    0 replays the full append history as the initial batch; `latest`
   *    resolves to the head at query start (changes-from-now)

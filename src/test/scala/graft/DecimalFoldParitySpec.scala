@@ -78,18 +78,18 @@ class DecimalFoldParitySpec extends AnyFunSuite {
 
   test("DotExactDec ≡ the zip_with/aggregate DECIMAL(38,20) fold — double arrays") {
     assertBitIdentical(doublePairs,
-      VectorFunctions.dotExactHof(col("a"), col("b")),
+      HofFolds.dotExactHof(col("a"), col("b")),
       VectorFunctions.dotExact(col("a"), col("b")), "dot(double,double)")
   }
 
   test("DotExactDec ≡ HOF fold — float arrays and mixed float/double") {
     assertBitIdentical(floatPairs,
-      VectorFunctions.dotExactHof(col("a"), col("b")),
+      HofFolds.dotExactHof(col("a"), col("b")),
       VectorFunctions.dotExact(col("a"), col("b")), "dot(float,float)")
     val mixed = floatPairs.select(col("a"),
       transform(col("b"), _.cast("double")).as("b"))
     assertBitIdentical(mixed,
-      VectorFunctions.dotExactHof(col("a"), col("b")),
+      HofFolds.dotExactHof(col("a"), col("b")),
       VectorFunctions.dotExact(col("a"), col("b")), "dot(float,double)")
   }
 
@@ -102,13 +102,13 @@ class DecimalFoldParitySpec extends AnyFunSuite {
     // null-safe != keeps NULL-norm rows: a null denominator divides to
     // NULL without the zero check in both forms.
     val nonZero = (c: Column) =>
-      !(VectorFunctions.dotExactHof(c, c) <=> lit(0.0))
+      !(HofFolds.dotExactHof(c, c) <=> lit(0.0))
     assertBitIdentical(doublePairs
         .filter(size(col("a")) > 0 && nonZero(col("a")) && nonZero(col("b"))),
-      VectorFunctions.cosineExactHof(col("a"), col("b")),
+      HofFolds.cosineExactHof(col("a"), col("b")),
       VectorFunctions.cosineExact(col("a"), col("b")), "cosine(double)")
     assertBitIdentical(floatPairs,
-      VectorFunctions.cosineExactHof(col("a"), col("b")),
+      HofFolds.cosineExactHof(col("a"), col("b")),
       VectorFunctions.cosineExact(col("a"), col("b")), "cosine(float)")
   }
 
@@ -128,13 +128,13 @@ class DecimalFoldParitySpec extends AnyFunSuite {
     // literal table (the single-query pqRankWith shape)
     val tlit = typedlit(tbl)
     assertBitIdentical(df,
-      graft.operators.Similarity.adcScoreHof(col("codes"), tlit, m, k),
+      HofFolds.adcScoreHof(col("codes"), tlit, m, k),
       VectorFunctions.adcScore(col("codes"), tlit, m, k), "adc(literal tbl)")
 
     // per-row table column (the batch shape)
     val withTbl = df.withColumn("tbl", typedlit(tbl))
     assertBitIdentical(withTbl,
-      graft.operators.Similarity.adcScoreHof(col("codes"), col("tbl"), m, k),
+      HofFolds.adcScoreHof(col("codes"), col("tbl"), m, k),
       VectorFunctions.adcScore(col("codes"), col("tbl"), m, k), "adc(column tbl)")
   }
 

@@ -11,7 +11,9 @@ object SparkTestSession {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", // managed-table root for catalog tests
+      // catalog root for ScaleTechniquesSpec's bucketBy … saveAsTable
+      // and OlistWarehouseSpec's CREATE DATABASE
+      .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("spark_wh").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

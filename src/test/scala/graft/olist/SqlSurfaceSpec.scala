@@ -1064,7 +1064,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](wh.tableAt("t", 1L))
   }
 
-  test("PIN TABLE … LEASE from SQL; DESCRIBE PINS shows age + lease + expiry; catalog-mode pin ops refuse with the path-mode diagnosis") {
+  test("PIN TABLE … LEASE from SQL; DESCRIBE PINS shows age + lease + expiry") {
     import spark.implicits._
     val wh = new Warehouse(spark, tmp("sql_pins_lease"))
     wh.enableSql()
@@ -1078,28 +1078,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(row.getLong(4) == 60000L, row.toString)
     assert(row.getString(5) == "false", "a fresh lease is not expired")
     spark.sql("UNPIN TABLE tl AS 'svc'").collect()
-    // catalog-mode: the vacuum shield has nothing to shield — the SQL
-    // surface says WHY instead of a generic require
-    val db = "sql_pins_cat_db"
-    val whc = new Warehouse(spark, tmp("sql_pins_cat"),
-      "parquet", database = Some(db))
-    whc.enableSql()
-    whc.save("tc", spark.range(5).select(col("id").as("k")).coalesce(1))
-    val refused = intercept[Exception] {
-      spark.sql("PIN TABLE tc VERSION 1 AS 'svc'").collect()
-    }
-    assert(refused.getMessage.contains("path-mode") &&
-      refused.getMessage.contains("catalog"), refused.getMessage)
-    // the fsck refuses with ITS OWN diagnosis (no manifest to audit
-    // against), not the pin message about shields
-    val refusedAudit = intercept[Exception] {
-      spark.sql("AUDIT TABLE tc").collect()
-    }
-    assert(refusedAudit.getMessage.contains("manifest") &&
-      refusedAudit.getMessage.contains("catalog"), refusedAudit.getMessage)
-    // rebind the path-mode warehouse for any later tests sharing the
-    // session registry
-    wh.enableSql()
   }
 
   test("zoneless TIMESTAMP AS OF resolves in the SESSION timezone, not the JVM default") {

@@ -151,7 +151,7 @@ class TableLayoutSpec extends AnyFunSuite {
     assert(r2 < t2)
   }
 
-  test("zorder: rejected in catalog mode and for a single column") {
+  test("zorder: rejected for a single column") {
     import spark.implicits._
     val wh = new Warehouse(spark, tmp("wh_zerr"))
     intercept[IllegalArgumentException] {
@@ -1631,7 +1631,7 @@ class TableLayoutSpec extends AnyFunSuite {
     assert(res3.filesCompacted == 1 && res3.filesWritten == 1, res3.toString)
     assert(wh.table("t").count() == 210 && wh.countRows("t").contains(210L))
     assert(wh.describeDetail("t").toMap.apply("numDeletionVectors") == "0")
-    // guard-rails: target below min refuses; catalog mode refuses
+    // guard-rail: a target below the minimum refuses
     intercept[IllegalArgumentException](wh.compactSmall("t", 10L, 50L))
   }
 }
