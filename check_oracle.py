@@ -1,6 +1,6 @@
 # Dev-loop oracle pre-checker (emulates the driver's DuckDB compare).
 # Usage: python3 check_oracle.py /root/testdata/sf0.01 /tmp/v1
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb, pandas as pd, numpy as np
 
 sf, out = sys.argv[1], sys.argv[2]
@@ -11,15 +11,20 @@ for p in glob.glob(f"{sf}/*.parquet"):
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 fails = []
+# per query: (name, read_parquet s, DuckDB execute s, compare s)
+timings = []
 for name, sql in sorted(oracle.items()):
     spark_dir = f"{out}/{name}"
     if not os.path.isdir(spark_dir):
         print(f"FAIL {name}: no spark output"); fails.append(name); continue
+    t0 = time.perf_counter()
     sp = pd.read_parquet(spark_dir)
+    t1 = time.perf_counter()
     try:
         du = con.execute(sql).fetchdf()
     except Exception as e:
         print(f"FAIL {name}: duckdb error {e}"); fails.append(name); continue
+    t2 = time.perf_counter()
     sp = sp.reindex(sorted(sp.columns), axis=1)
     du = du.reindex(sorted(du.columns), axis=1)
     if list(sp.columns) != list(du.columns):
@@ -46,10 +51,18 @@ for name, sql in sorted(oracle.items()):
             i = int(np.argmax(mask.to_numpy())) if mask.any() else 0
             baddetail = f"col {c} row {i}: spark={a.iloc[i]!r} duck={b.iloc[i]!r} (dtypes {a.dtype}/{b.dtype})"
             break
+    timings.append((name, t1 - t0, t2 - t1, time.perf_counter() - t2))
     if ok:
         print(f"ok   {name} ({len(sp)} rows)")
     else:
         print(f"FAIL {name}: {baddetail}"); fails.append(name)
 
 print(f"\n{len(oracle)-len(fails)}/{len(oracle)} pass")
+tot = [sum(t[i] for t in timings) for i in (1, 2, 3)]
+print(f"time: read_parquet {tot[0]:.1f}s, duckdb {tot[1]:.1f}s, "
+      f"compare {tot[2]:.1f}s over {len(timings)} queries", file=sys.stderr)
+print("10 slowest (total s: read_parquet / duckdb / compare):", file=sys.stderr)
+for name, r, d, c in sorted(timings, key=lambda t: -sum(t[1:]))[:10]:
+    print(f"  {r + d + c:8.2f}  {r:7.2f} / {d:7.2f} / {c:7.2f}  {name}",
+          file=sys.stderr)
 sys.exit(1 if fails else 0)

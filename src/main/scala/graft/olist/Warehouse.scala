@@ -33,11 +33,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
   require(Seq("parquet", "orc", "json", "csv").contains(format),
     s"unsupported warehouse format: $format")
 
-  /** Partition spec recorded at save time so appends lay files out
-    * identically (a flat append into a partitioned directory corrupts
-    * partition discovery). */
-  private val partitioning = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-
   /** Serializes read-modify-write manifest commits per table within
     * this JVM, so concurrent writers in one application (e.g. two
     * streams into the same table) cannot erase each other's commit
@@ -479,38 +474,47 @@ class Warehouse(val spark: SparkSession, basePath: String,
     if (currentManifest(name).isDefined)
       read(name).createOrReplaceTempView(s"dw_$name")
 
-  /** Cluster spec recorded at save time — clustering is TABLE layout,
-    * not a per-write option: append/compact/merge must re-apply the
-    * sort or they silently destroy the row-group-skipping property. */
-  private val clustering = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-  private val clusterKinds = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val bloomCols = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
+  /** A table's write layout: partition columns, cluster columns and
+    * kind, bloom columns (the point-lookup complement of min/max stats,
+    * for high-cardinality ids and digests) and [[statsBy]]'s declared
+    * stats columns. It is TABLE
+    * layout, not a per-write option: append/compact/merge must re-apply
+    * it or they silently corrupt partition discovery and destroy the
+    * row-group-skipping property. The committed manifest meta is its
+    * one store; writes that commit a NEW layout (save, recluster) pass
+    * it down explicitly. */
+  private final case class Layout(parts: Seq[String] = Nil,
+      cluster: Seq[String] = Nil, kind: String = LinearKind,
+      bloom: Seq[String] = Nil, stats: Seq[String] = Nil)
 
-  private def clusterColsOf(name: String): Seq[String] =
-    clustering.getOrElseUpdate(name,
-      currentManifestFull(name).flatMap(_._3.get(ClusterMeta))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(loadMeta(name)._3))
+  private def layoutOf(meta: Map[String, String]): Layout = {
+    def cols(k: String): Seq[String] = meta.get(k)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    Layout(cols(PartsMeta), cols(ClusterMeta),
+      meta.get(ClusterKindMeta).filter(_.nonEmpty).getOrElse(LinearKind),
+      cols(BloomMeta), cols(StatsByMeta))
+  }
 
-  /** Bloom-filter columns — the point-lookup complement of the min/max
-    * stats: high-cardinality columns (ids, digests) where every file
-    * spans the whole value space, so ranges prune nothing but a
-    * membership sketch prunes almost everything. */
-  private def bloomColsOf(name: String): Seq[String] =
-    bloomCols.getOrElseUpdate(name,
-      currentManifestFull(name).flatMap(_._3.get(BloomMeta))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(loadMeta(name)._5))
+  /** The committed layout of `name` (empty when it has no snapshot). */
+  private def layoutOf(name: String): Layout =
+    layoutOf(currentManifestFull(name).map(_._3).getOrElse(Map.empty))
 
-  /** Declared extra stats columns — [[statsBy]]'s table-layout state,
-    * recovered from the manifest like the cluster/bloom lists. */
-  private val statsByDecl = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
+  /** The table-definition meta a commit creating a table records:
+    * schema plus layout, so every later reader — this instance or a
+    * fresh one over the same store — sees the declared definition. */
+  private def definitionMeta(sc: org.apache.spark.sql.types.StructType,
+      lay: Layout): Map[String, String] =
+    Map(SchemaMeta -> sc.json, PartsMeta -> lay.parts.mkString(","),
+      ClusterMeta -> lay.cluster.mkString(","), ClusterKindMeta -> lay.kind,
+      BloomMeta -> lay.bloom.mkString(","))
 
-  private def statsColsOf(name: String): Seq[String] =
-    statsByDecl.getOrElseUpdate(name,
-      currentManifestFull(name).flatMap(_._3.get(StatsByMeta))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil))
+  /** [[definitionMeta]] under an empty layout when the commit about to
+    * land creates the table. */
+  private def bornMeta(creating: Boolean,
+      sc: org.apache.spark.sql.types.StructType): Map[String, String] =
+    if (creating) definitionMeta(sc, Layout()) else Map.empty
+
+  private def partitionColsOf(name: String): Seq[String] = layoutOf(name).parts
 
   /** Declare extra statistics columns for a table: every
     * later write records min/max ranges AND an HLL NDV sketch for
@@ -535,11 +539,11 @@ class Warehouse(val spark: SparkSession, basePath: String,
           throw new IllegalArgumentException(
             s"statsBy: $name has no committed snapshot"))
       val sc = tableSchema(name)
-      val parts = partitionColsOf(name)
+      val lay = layoutOf(meta).copy(stats = cols)
       val bad = cols.filterNot(sc.fieldNames.contains)
       require(bad.isEmpty,
         s"statsBy: unknown column(s) ${bad.mkString(", ")} on $name")
-      require(cols.forall(!parts.contains(_)),
+      require(cols.forall(!lay.parts.contains(_)),
         "statsBy: partition columns already prune by directory")
       // stats columns are layout-bearing (requireRenameable blocks
       // rename-after-declare); the mirror refusal — a PREVIOUSLY
@@ -553,26 +557,17 @@ class Warehouse(val spark: SparkSession, basePath: String,
         s"statsBy: ${renamed.mkString(", ")} on $name was renamed " +
           "(physical name differs) — stats collection keys by physical " +
           "column name; declare before renaming, or rename back")
-      statsByDecl(name) = cols
       // immediate re-analyze: one stats pass over the snapshot's own
       // files (clone-borrowed ".." paths keep their old entries — their
       // owner re-analyzes them); DV refs survive entry replacement
       val (own, borrowed) = files.partition(!_.path.contains(".."))
       val byPath = files.map(f => f.path -> f).toMap
-      val recollected = collectStats(name, own.map(_.path), sc)
+      val recollected = collectStats(name, own.map(_.path), sc, lay)
         .map(f => f.copy(dv = byPath(f.path).dv))
       commitManifest(name, recollected ++ borrowed,
         Map(StatsByMeta -> cols.mkString(",")), op = "statsby")
     }
   }
-
-  /** Cluster KIND (linear sort vs z-order interleave) — table layout
-    * like the column list, recovered the same way. */
-  private def clusterKindOf(name: String): String =
-    clusterKinds.getOrElseUpdate(name,
-      currentManifestFull(name).flatMap(_._3.get(ClusterKindMeta))
-        .orElse(loadMeta(name)._4)
-        .getOrElse(LinearKind))
 
   /** Re-applies the table's recorded clustering to rows about to be
     * written.
@@ -590,10 +585,10 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * driver-side bounds agg): batch-relative scaling only affects
     * cross-batch LOCALITY, never correctness — skipping always compares
     * against the real recorded column stats, not z-values. */
-  private def clustered(name: String, df: DataFrame, parts: Seq[String]): DataFrame = {
-    val cluster = clusterColsOf(name)
+  private def clustered(df: DataFrame, lay: Layout): DataFrame = {
+    val (parts, cluster) = (lay.parts, lay.cluster)
     if (cluster.isEmpty) df
-    else if (clusterKindOf(name) == ZOrderKind) {
+    else if (lay.kind == ZOrderKind) {
       require(!df.columns.contains(ZCol), s"column name $ZCol is reserved")
       val keyed = df.withColumn(ZCol, graft.operators.ZOrder.zvalue(df, cluster))
       val keys = (parts :+ ZCol).map(col)
@@ -646,32 +641,19 @@ class Warehouse(val spark: SparkSession, basePath: String,
       bloomBy: Seq[String] = Nil): DataFrame = {
     require(!zorder || clusterBy.size >= 2,
       "zorder needs at least two cluster columns (one column = linear clusterBy)")
-    partitioning(name) = partitionBy
-    schemas(name) = df.schema
-    clustering(name) = clusterBy
-    clusterKinds(name) = if (zorder) ZOrderKind else LinearKind
-    bloomCols(name) = bloomBy
-    val shaped = clustered(name, df, partitionBy)
-    val files = stageWrite(name, shaped, partitionBy, mapCols = false)
+    val lay = Layout(partitionBy, clusterBy,
+      if (zorder) ZOrderKind else LinearKind, bloomBy, layoutOf(name).stats)
+    val files = stageWrite(name, clustered(df, lay), lay, mapCols = false)
     // overwrite: new snapshot is the new files; the schema rides the
     // SAME atomic commit so no crash window can separate data from
     // its definition, and tableAt reads each version with the
     // schema it was committed under. A full rewrite resets the
     // rename/drop column mapping — the new files ARE the schema.
     withCommitLock(name) {
-      commitManifest(name, files, Map(SchemaMeta -> df.schema.json,
-        PartsMeta -> partitionBy.mkString(","),
-        ClusterMeta -> clusterBy.mkString(","),
-        ClusterKindMeta -> clusterKinds(name),
-        BloomMeta -> bloomBy.mkString(","),
-        ColMapMeta -> "", DroppedMeta -> ""), op = "save")
+      commitManifest(name, files, definitionMeta(df.schema, lay) ++
+        Map(ColMapMeta -> "", DroppedMeta -> ""), op = "save")
     }
-    // side meta is bootstrap redundancy for pre-manifest readers
-    writeMeta(name, partitionBy, df.schema, clusterBy, clusterKinds(name),
-      bloomBy)
-    val back = read(name)
-    back.createOrReplaceTempView(s"dw_$name")
-    back
+    read(name)
   }
 
   /** S5/S7 append sink (reference: SSIS fast-load `Package.dtsx:281-445`;
@@ -684,20 +666,15 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * add-column semantics of production table formats, no rewrite of
     * old data). Dropping or retyping columns is rejected loudly. */
   def append(name: String, df: DataFrame): Unit = {
-    val parts = partitionColsOf(name)
     val (aligned0, widened) = alignDelta(name, df, allowWiden = true)
     val aligned = enforceChecks(name, aligned0)
-    val files = stageWrite(name, clustered(name, aligned, parts), parts)
+    val files = stageLaidOut(name, aligned)
     withCommitLock(name) {
-      val old = currentManifest(name).map(_._2).getOrElse(Nil)
-      commitManifest(name, old ++ files,
-        widened.map(m => Map(SchemaMeta -> m.json)).getOrElse(Map.empty),
+      val old = currentManifest(name).map(_._2)
+      commitManifest(name, old.getOrElse(Nil) ++ files,
+        bornMeta(old.isEmpty, aligned.schema) ++
+          widened.map(m => Map(SchemaMeta -> m.json)).getOrElse(Map.empty),
         op = "append")
-    }
-    widened.foreach { merged =>
-      schemas(name) = merged
-      writeMeta(name, parts, merged, clusterColsOf(name), clusterKindOf(name),
-        bloomColsOf(name))
     }
     maybeAutoCompact(name, files.map(f => partitionPrefix(f.path)).toSet)
   }
@@ -757,12 +734,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
             .filter { case (p, fs) => touched.contains(p) && fs.size >= minFiles }
             .values.flatten.map(_.path).toSeq
         if (matched.nonEmpty) {
-          val sc = metaSchema(meta).getOrElse(tableSchema(name))
+          val sc = committedSchema(name, meta)
           val snapshot = fromFiles(name, matched, sc)
           val shaped =
             if (parts.isEmpty) snapshot.coalesce(1)
             else snapshot.repartition(parts.map(col): _*)
-          val rewritten = stageWrite(name, clustered(name, shaped, parts), parts)
+          val rewritten = stageLaidOut(name, shaped)
           val untouchedFiles = cur.filterNot(f => matched.contains(f.path))
           commitManifest(name, untouchedFiles ++ rewritten, op = "compact")
         }
@@ -794,7 +771,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"renameColumn: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
+      val sc = committedSchema(name, meta)
       require(sc.fieldNames.contains(from),
         s"renameColumn: no column $from in ${sc.fieldNames.mkString(", ")}")
       requireRenameable(name, meta, from, "renameColumn")
@@ -812,11 +789,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         sc.map(f => if (f.name == from) f.copy(name = to) else f))
       commitManifest(name, files, Map(SchemaMeta -> newSchema.json,
         ColMapMeta -> encodeColMap(newMap)), op = "rename-column")
-      schemas(name) = newSchema
-      writeMeta(name, partitionColsOf(name), newSchema, clusterColsOf(name),
-        clusterKindOf(name), bloomColsOf(name))
     }
-    read(name).createOrReplaceTempView(s"dw_$name")
   }
 
   /** DROP COLUMN, metadata-only: the physical column stays in old
@@ -832,7 +805,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"dropColumn: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
+      val sc = committedSchema(name, meta)
       require(sc.fieldNames.contains(colName),
         s"dropColumn: no column $colName in ${sc.fieldNames.mkString(", ")}")
       require(sc.size > 1, s"dropColumn: $colName is $name's only column")
@@ -845,11 +818,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         ColMapMeta -> encodeColMap(cm - colName),
         DroppedMeta -> (droppedOf(meta) + physical).toSeq.sorted
           .mkString(",")), op = "drop-column")
-      schemas(name) = newSchema
-      writeMeta(name, partitionColsOf(name), newSchema, clusterColsOf(name),
-        clusterKindOf(name), bloomColsOf(name))
     }
-    read(name).createOrReplaceTempView(s"dw_$name")
   }
 
   /** Lossless numeric widenings the parquet vectorized reader promotes
@@ -887,27 +856,22 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"widenColumn: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
+      val sc = committedSchema(name, meta)
       require(sc.fieldNames.contains(colName),
         s"widenColumn: no column $colName in ${sc.fieldNames.mkString(", ")}")
       val f = sc(colName)
       require(canWiden(f.dataType, to),
         s"widenColumn: ${f.dataType} -> $to is not a lossless widening " +
           "(supported: byte/short/int -> wider integral, float -> double)")
-      require(!partitionColsOf(name).contains(colName) &&
-        !clusterColsOf(name).contains(colName) &&
-        !bloomColsOf(name).contains(colName),
+      val lay = layoutOf(meta)
+      require(!(lay.parts ++ lay.cluster ++ lay.bloom).contains(colName),
         s"widenColumn: $colName is a layout column of $name " +
           "(partition/cluster/bloom metadata is keyed by the declared type)")
       val newSchema = org.apache.spark.sql.types.StructType(
         sc.map(x => if (x.name == colName) x.copy(dataType = to) else x))
       commitManifest(name, files, Map(SchemaMeta -> newSchema.json),
         op = "widen-column")
-      schemas(name) = newSchema
-      writeMeta(name, partitionColsOf(name), newSchema, clusterColsOf(name),
-        clusterKindOf(name), bloomColsOf(name))
     }
-    read(name).createOrReplaceTempView(s"dw_$name")
   }
 
   /** PARTITION EVOLUTION, metadata-only: change the partition layout
@@ -937,7 +901,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"repartitionTable: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
+      val sc = committedSchema(name, meta)
       val colMap = colMapOf(meta)
       newPartitionBy.foreach { c =>
         require(sc.fieldNames.contains(c),
@@ -949,9 +913,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
       }
       commitManifest(name, files,
         Map(PartsMeta -> newPartitionBy.mkString(",")), op = "repartition")
-      partitioning(name) = newPartitionBy
-      writeMeta(name, newPartitionBy, sc, clusterColsOf(name),
-        clusterKindOf(name), bloomColsOf(name))
     }
   }
 
@@ -960,13 +921,14 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * name) and columns referenced by CHECK expressions. */
   private def requireRenameable(name: String, meta: Map[String, String],
       colName: String, op: String): Unit = {
-    require(!partitionColsOf(name).contains(colName),
+    val lay = layoutOf(meta)
+    require(!lay.parts.contains(colName),
       s"$op: $colName is a partition column of $name")
-    require(!clusterColsOf(name).contains(colName),
+    require(!lay.cluster.contains(colName),
       s"$op: $colName is a cluster column of $name (per-file stats key)")
-    require(!bloomColsOf(name).contains(colName),
+    require(!lay.bloom.contains(colName),
       s"$op: $colName is a bloom column of $name (sketches key by name)")
-    require(!statsColsOf(name).contains(colName),
+    require(!lay.stats.contains(colName),
       s"$op: $colName is a declared stats column of $name " +
         "(statsBy(name, cols) without it first)")
     val referencing = decodeChecks(meta).filter(c =>
@@ -1118,7 +1080,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           val (aligned, widened) =
             if (existed) alignDelta(rejects, viol, allowWiden = true)
             else (viol, None)
-          val staged = stageWrite(rejects, aligned, Nil)
+          val staged = stageLaidOut(rejects, aligned)
           withCommitLock(rejects) {
             currentManifest(rejects) match {
               case Some((_, old)) =>
@@ -1127,15 +1089,9 @@ class Warehouse(val spark: SparkSession, basePath: String,
                     .getOrElse(Map.empty), op = "append")
               case None =>
                 commitManifest(rejects, staged,
-                  Map(SchemaMeta -> aligned.schema.json, PartsMeta -> "",
-                    ClusterMeta -> "", ClusterKindMeta -> LinearKind,
-                    BloomMeta -> ""), op = "save")
+                  definitionMeta(aligned.schema, Layout()), op = "save")
             }
           }
-          schemas(rejects) = widened.getOrElse(aligned.schema)
-          partitioning(rejects) = Nil
-          writeMeta(rejects, Nil, widened.getOrElse(aligned.schema),
-            Nil, LinearKind, Nil)
         }
         pinned.filter(failCol.isNull)
       }
@@ -1204,8 +1160,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
       val widenedCols = retargeted.zip(current).collect {
         case (r, c) if r.dataType != c.dataType => r.name }
       if (widenedCols.nonEmpty) {
-        val layout = (partitionColsOf(name) ++ clusterColsOf(name) ++
-          bloomColsOf(name)).toSet
+        val lay = layoutOf(name)
+        val layout = (lay.parts ++ lay.cluster ++ lay.bloom).toSet
         val bad = widenedCols.filter(layout.contains)
         require(bad.isEmpty,
           s"delta for $name widens layout column(s) ${bad.mkString(", ")} — " +
@@ -1220,24 +1176,18 @@ class Warehouse(val spark: SparkSession, basePath: String,
     }
   }
 
-  /** The table's current schema: the manifest's committed copy wins
-    * (versioned atomically with the data), then the in-memory cache,
-    * then side meta. */
+  /** The table's current schema, as its committed manifest records it
+    * (versioned atomically with the data); empty when the table has no
+    * snapshot yet. */
   private def tableSchema(name: String): org.apache.spark.sql.types.StructType =
-    currentManifestFull(name).flatMap(m => metaSchema(m._3)).getOrElse(
-      schemas.getOrElseUpdate(name,
-        loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil))))
+    currentManifestFull(name).flatMap(m => metaSchema(m._3))
+      .getOrElse(org.apache.spark.sql.types.StructType(Nil))
 
   private def metaSchema(meta: Map[String, String])
       : Option[org.apache.spark.sql.types.StructType] =
     meta.get(SchemaMeta).flatMap(j =>
       scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
-
-  /** The table's partition columns as a NEW Warehouse instance over an
-    * existing store must see them: from the persisted meta files. */
-  private def partitionColsOf(name: String): Seq[String] =
-    partitioning.getOrElseUpdate(name, loadMeta(name)._1)
 
   /** Partition-scoped overwrite: replace ONLY the partitions present in
     * `df`, leaving every other partition's files physically untouched
@@ -1255,7 +1205,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     requireUniformLayout("overwritePartitions", name,
       currentManifest(name).map(_._2).getOrElse(Nil))
     val (aligned, _) = alignDelta(name, df, allowWiden = false)
-    val files = stageWrite(name, clustered(name, aligned, parts), parts)
+    val files = stageLaidOut(name, aligned)
     val touched = files.map(f => partitionPrefix(f.path)).toSet
     withCommitLock(name) {
       val kept = currentManifest(name).map(_._2).getOrElse(Nil)
@@ -1430,10 +1380,9 @@ class Warehouse(val spark: SparkSession, basePath: String,
         val rewrite = straddling -- dvTargets
         val rewritten =
           if (rewrite.isEmpty) Nil
-          else stageWrite(name, clustered(name,
-            fromFiles(name, rewrite.toSeq.sorted, sc)
-              .join(broadcast(deltaKeys), keys, "left_anti")
-              .select(outCols.map(col): _*), parts), parts)
+          else stageLaidOut(name, fromFiles(name, rewrite.toSeq.sorted, sc)
+            .join(broadcast(deltaKeys), keys, "left_anti")
+            .select(outCols.map(col): _*))
         val dvUpdated = writeDvPositions(name, dvTargets.toSeq.sorted,
           byPath,
           fromFiles(name, dvTargets.toSeq.sorted, sc, withPos = true)
@@ -1442,8 +1391,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           newCount = p => matched(p)._2)
         val deltaFiles =
           if (deltaRows == 0) Nil
-          else stageWrite(name, clustered(name,
-            aligned.select(outCols.map(col): _*), parts), parts)
+          else stageLaidOut(name, aligned.select(outCols.map(col): _*))
         val untouched = manifestFiles.filterNot(f =>
           droppedWhole.contains(f.path) || rewrite.contains(f.path) ||
             dvTargets.contains(f.path))
@@ -1490,7 +1438,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           .join(broadcast(deltaKeys), keys, "left_anti") // minus matched keys
           .select(outCols.map(col): _*)
         val merged = keptRows.unionByName(aligned.select(outCols.map(col): _*))
-        val files = stageWrite(name, clustered(name, merged, parts), parts)
+        val files = stageLaidOut(name, merged)
         val keptFiles = manifestFiles
           .filterNot(f => prefixSet.contains(partitionPrefix(f.path)))
         // row-level change files: the replaced pre-images leave, the
@@ -1587,8 +1535,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"delete: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
-      val parts = partitionColsOf(name)
+      val sc = committedSchema(name, meta)
       require(fromFiles(name, files.map(_.path), sc)
           .select(predicate.as("__p")).queryExecution.analyzed
           .expressions.forall(_.deterministic),
@@ -1637,7 +1584,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
             // compact)
             val keep = fromFiles(name, rewrite.toSeq, sc)
               .filter(!(predicate <=> lit(true)))
-            stageWrite(name, clustered(name, keep, parts), parts)
+            stageLaidOut(name, keep)
           }
         val dvUpdated = writeDv(name, dvTargets.toSeq.sorted, sc, byPath,
           predicate, newCount = p => matched(p)._2)
@@ -1828,8 +1775,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"update: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
-      val parts = partitionColsOf(name)
+      val sc = committedSchema(name, meta)
       assignments.keys.foreach { c =>
         require(sc.fieldNames.contains(c),
           s"update: column $c is not in ${sc.fieldNames.mkString(", ")}") }
@@ -1878,18 +1824,15 @@ class Warehouse(val spark: SparkSession, basePath: String,
         val rowsUpdated = matched.valuesIterator.map(_._2).sum
         val rewritten =
           if (rewriteSet.isEmpty) Nil
-          else stageWrite(name,
-            clustered(name,
-              applyAssign(fromFiles(name, rewriteSet.toSeq, sc)), parts),
-            parts)
+          else stageLaidOut(name,
+            applyAssign(fromFiles(name, rewriteSet.toSeq, sc)))
         val dvUpdated = writeDv(name, dvTargets.toSeq.sorted, sc, byPath,
           predicate, newCount = p => matched(p)._2)
         val appended =
           if (dvTargets.isEmpty) Nil
-          else stageWrite(name,
-            clustered(name,
-              applyAssign(fromFiles(name, dvTargets.toSeq, sc)
-                .filter(predicate <=> lit(true))), parts), parts)
+          else stageLaidOut(name,
+            applyAssign(fromFiles(name, dvTargets.toSeq, sc)
+              .filter(predicate <=> lit(true))))
         val untouched = files.filterNot(f => touched.contains(f.path))
         val pre = fromFiles(name, touched.toSeq, sc)
           .filter(predicate <=> lit(true))
@@ -2050,7 +1993,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
             pmod(hash(snapshot.columns.map(col): _*), lit(n))): _*)
         } else snapshot.coalesce(n)
       // clustering is table layout: compaction must re-establish it
-      val files = stageWrite(name, clustered(name, shaped, parts), parts)
+      val files = stageLaidOut(name, shaped)
       // full replace: the snapshot covers the table
       commitManifest(name, files, op = "compact")
     }
@@ -2078,14 +2021,13 @@ class Warehouse(val spark: SparkSession, basePath: String,
       minFileRows: Long): Warehouse.CompactResult = {
     require(minFileRows > 0 && targetRows >= minFileRows,
       s"compactSmall: need 0 < minFileRows ≤ targetRows")
-    val parts = partitionColsOf(name)
     withCommitLock(name) {
       val (files, meta) = currentManifestFull(name) match {
         case Some((_, fs, m)) => (fs, m)
         case None => throw new IllegalArgumentException(
           s"compactSmall: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
+      val sc = committedSchema(name, meta)
       requireUniformLayout("compactSmall", name, files)
       val live = (f: Warehouse.DataFile) => f.stats.get(RowsKey)
         .map(_._1.toLong - f.dv.map(_.rows).getOrElse(0L))
@@ -2107,8 +2049,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           val bins = math.max(1L,
             (g.map(_._3).sum + targetRows - 1) / targetRows).toInt
           val df = fromFiles(name, g.map(_._2.path), sc)
-          stageWrite(name,
-            clustered(name, df.repartition(bins), parts), parts)
+          stageLaidOut(name, df.repartition(bins))
         }
         val untouched = files.filterNot(f => doomed.contains(f.path))
         commitManifest(name, untouched ++ newFiles, op = "compact")
@@ -2143,7 +2084,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         case None => throw new IllegalArgumentException(
           s"compactWhere: $name has no committed snapshot")
       }
-      val sc = metaSchema(meta).getOrElse(tableSchema(name))
+      val sc = committedSchema(name, meta)
       requireUniformLayout("compactWhere", name, files)
       val rows: Seq[org.apache.spark.sql.Row] = files.map { f =>
         val kv = f.path.split("/").dropRight(1).flatMap { seg =>
@@ -2176,7 +2117,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           if (n == 1) snapshot.repartition(parts.map(col): _*)
           else snapshot.repartition((parts.map(col) :+
             pmod(hash(snapshot.columns.map(col): _*), lit(n))): _*)
-        val rewritten = stageWrite(name, clustered(name, shaped, parts), parts)
+        val rewritten = stageLaidOut(name, shaped)
         val untouched = files.filterNot(f => matched.contains(f.path))
         commitManifest(name, untouched ++ rewritten, op = "compact")
         Warehouse.CompactResult(matched.size, rewritten.size, untouched.size)
@@ -2384,23 +2325,20 @@ class Warehouse(val spark: SparkSession, basePath: String,
     }
   }
 
-  /** Schema recorded at save time — json/csv don't self-describe. */
-  private val schemas = scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  /** The current snapshot under the schema it was committed with
+    * (json/csv don't self-describe). */
+  private def read(name: String): DataFrame = {
+    val (_, files, meta) = currentManifestFull(name).getOrElse(
+      throw new IllegalArgumentException(s"$name has no committed snapshot"))
+    fromFiles(name, files.map(_.path), committedSchema(name, meta))
+  }
 
-  private def read(name: String): DataFrame =
-    currentManifestFull(name) match {
-      case Some((_, files, meta)) =>
-        // the committed schema wins — it versioned atomically with
-        // the data (cache/side meta are bootstrap fallbacks)
-        val sc = metaSchema(meta).getOrElse(schemas.getOrElseUpdate(name,
-          loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil))))
-        fromFiles(name, files.map(_.path), sc)
-      case None => // pre-manifest store layout (or foreign directory)
-        val sc = schemas.getOrElseUpdate(name,
-          loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil)))
-        val r = spark.read.format(format).option("header", "true")
-        (if (sc.isEmpty) r else r.schema(sc)).load(s"$basePath/$name")
-    }
+  /** The schema a version's meta records — every commit that creates
+    * a table records one (see [[commitManifest]]). */
+  private def committedSchema(name: String, meta: Map[String, String])
+      : org.apache.spark.sql.types.StructType =
+    metaSchema(meta).getOrElse(throw new IllegalStateException(
+      s"$name: committed snapshot records no schema"))
 
   /** Snapshot reader over an explicit committed file list, resolved at
     * DataFrame creation — concurrent commits can't change or truncate
@@ -2438,8 +2376,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         .getOrElse(Map.empty))
       val dvTouched = files.filter(dvBy.contains)
       val needPos = withPos || dvTouched.nonEmpty
-      require(!needPos || sc.nonEmpty,
-        s"$name: positional read needs a declared schema")
+      require(sc.nonEmpty, s"$name: reading data files needs a declared schema")
       // per-file stats/blooms of the CURRENT snapshot, for read-path
       // file skipping — files are immutable once committed, so current
       // stats stay valid for any path they describe (a historical
@@ -2448,7 +2385,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         manifest.map(_._2.iterator.map(df => df.path -> df).toMap)
           .getOrElse(Map.empty)
       val phys =
-        if (colMap.isEmpty || sc.isEmpty) sc
+        if (colMap.isEmpty) sc
         else org.apache.spark.sql.types.StructType(sc.map(f =>
           colMap.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
       // a shallow clone's manifest may reference files in SEVERAL
@@ -2501,32 +2438,26 @@ class Warehouse(val spark: SparkSession, basePath: String,
           })
           case None => computeGroupNdv(fs, statsBy)
         }
-      def load(owner: String, fs: Seq[String]): DataFrame =
-        if (phys.isEmpty) {
-          // schema-less pre-manifest read: Spark's own inference path
-          spark.read.format(format).option("header", "true")
-            .option("basePath", s"$basePath/$owner")
-            .load(fs.map(f => s"$basePath/$name/$f"): _*)
-        } else {
-          val opts = Map("basePath" -> s"$basePath/$owner") ++
-            (if (format == "csv") Map("header" -> "true") else Map.empty)
-          val leaves = fs.map(f => qualifiedPath(
-            s"$basePath/${normalizedRel(name, f)}"))
-          val index = new org.apache.spark.sql.graft.PruningFileIndex(
-            spark, leaves, opts, phys, groupPruner(name, fs, statsBy, phys))
-          val gRows = groupRows(fs)
-          val rel = org.apache.spark.sql.graft.PruningFileIndex.relation(
-            spark, index, phys, format, opts, name,
-            catalogStats = gRows.map(r =>
-              (BigInt(index.sizeInBytes), Some(BigInt(r)))),
-            colNdv = if (gRows.isDefined) groupNdv(fs) else Map.empty)
-          // position columns ride the scan's hidden _metadata (parquet
-          // row_index), resolved per relation — they cannot be added
-          // after the union, so every group materializes them here
-          if (!needPos) rel
-          else rel.withColumn(DvFileCol, relPathCol)
-            .withColumn(DvPosCol, col("_metadata.row_index"))
-        }
+      def load(owner: String, fs: Seq[String]): DataFrame = {
+        val opts = Map("basePath" -> s"$basePath/$owner") ++
+          (if (format == "csv") Map("header" -> "true") else Map.empty)
+        val leaves = fs.map(f => qualifiedPath(
+          s"$basePath/${normalizedRel(name, f)}"))
+        val index = new org.apache.spark.sql.graft.PruningFileIndex(
+          spark, leaves, opts, phys, groupPruner(name, fs, statsBy, phys))
+        val gRows = groupRows(fs)
+        val rel = org.apache.spark.sql.graft.PruningFileIndex.relation(
+          spark, index, phys, format, opts, name,
+          catalogStats = gRows.map(r =>
+            (BigInt(index.sizeInBytes), Some(BigInt(r)))),
+          colNdv = if (gRows.isDefined) groupNdv(fs) else Map.empty)
+        // position columns ride the scan's hidden _metadata (parquet
+        // row_index), resolved per relation — they cannot be added
+        // after the union, so every group materializes them here
+        if (!needPos) rel
+        else rel.withColumn(DvFileCol, relPathCol)
+          .withColumn(DvPosCol, col("_metadata.row_index"))
+      }
       val raw = groups.map { case ((owner, _), fs) => load(owner, fs) }
         .reduce(_ unionByName _)
       val undeleted =
@@ -2913,8 +2844,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
         commitManifest(mv, mvFiles, stamp, op = "mv-refresh")
         Warehouse.MvRefresh(from, curV, 0L, 0, bootstrapped = false)
       } else {
-        val mvSc = metaSchema(mvMeta).getOrElse(tableSchema(mv))
-        val parts = partitionColsOf(mv)
+        val mvSc = committedSchema(mv, mvMeta)
         val keyCond = (l: String, r: String) =>
           keys.map(k => col(s"$l.$k") <=> col(s"$r.$k")).reduce(_ && _)
         // one columnar key probe: which MV files hold an affected key?
@@ -2963,8 +2893,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
                   .otherwise(metric(col(s"o.sum_$c"), col(s"d.sum_$c")))
                   .cast(mvSc(s"sum_$c").dataType).as(s"sum_$c"))): _*)
           .filter(col("cnt") > 0)
-        val rewritten = stageWrite(mv,
-          clustered(mv, rewritten0, parts), parts)
+        val rewritten = stageLaidOut(mv, rewritten0)
         val untouched = mvFiles.filterNot(f => touched.contains(f.path))
         commitManifest(mv, untouched ++ rewritten, stamp, op = "mv-refresh")
         Warehouse.MvRefresh(from, curV, changed, touched.size,
@@ -3153,8 +3082,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           candidateFiles(factFiles, factSc).map(_.path), factSc)
         val fresh = joined(affected(factNow), dimNow).localCheckpoint()
         // MV file surgery: rewrite only files HOLDING an affected row
-        val mvSc = metaSchema(mvMeta).getOrElse(tableSchema(mv))
-        val parts = partitionColsOf(mv)
+        val mvSc = committedSchema(mv, mvMeta)
         val mvPaths = candidateFiles(mvFiles, mvSc).map(_.path)
         // an empty candidate set (no view file can hold an affected
         // row — e.g. a late dim key no view row carries yet) means no
@@ -3181,8 +3109,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
           }.toSet
         }
         val keptMinus = split(fromFiles(mv, touched.toSeq, mvSc))._2
-        val rewritten = stageWrite(mv,
-          clustered(mv, keptMinus.unionByName(fresh), parts), parts)
+        val rewritten = stageLaidOut(mv, keptMinus.unionByName(fresh))
         val untouched = mvFiles.filterNot(f => touched.contains(f.path))
         commitManifest(mv, untouched ++ rewritten, stamp,
           op = "mv-join-refresh")
@@ -3202,13 +3129,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
       filesPerPartition: Int = 1): Unit = {
     require(!zorder || clusterBy.size >= 2,
       "zorder needs at least two cluster columns")
-    clustering(name) = clusterBy
-    clusterKinds(name) = if (zorder) ZOrderKind else LinearKind
-    bloomCols(name) = bloomBy
     withCommitLock(name) {
       // piggyback the spec change on a commit that also rewrites the
       // data: layout metadata and layout reality stay in step
-      val parts = partitionColsOf(name)
+      val lay = layoutOf(name).copy(cluster = clusterBy,
+        kind = if (zorder) ZOrderKind else LinearKind, bloom = bloomBy)
+      val parts = lay.parts
       val snapshot = read(name)
       val n = math.max(filesPerPartition, 1)
       val shaped =
@@ -3228,14 +3154,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
           else snapshot.repartition((parts.map(col) :+
             pmod(hash(snapshot.columns.map(col): _*), lit(n))): _*)
         } else snapshot.coalesce(n)
-      val files = stageWrite(name, clustered(name, shaped, parts), parts)
+      val files = stageWrite(name, clustered(shaped, lay), lay)
       commitManifest(name, files, Map(
         ClusterMeta -> clusterBy.mkString(","),
-        ClusterKindMeta -> clusterKinds(name),
+        ClusterKindMeta -> lay.kind,
         BloomMeta -> bloomBy.mkString(",")), op = "recluster")
     }
-    writeMeta(name, partitionColsOf(name), tableSchema(name), clusterBy,
-      clusterKinds(name), bloomBy)
   }
 
   /** Commit history of a table, ascending — the DESCRIBE
@@ -3297,9 +3221,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     // or types, a later rename/drop changed the visible names — and
     // the DV state of THAT version (a later delete's positions must
     // not vanish from a historical read, nor an older one's reappear)
-    fromFiles(name, files.map(_.path), metaSchema(vMeta).getOrElse(
-      schemas.getOrElseUpdate(name,
-        loadMeta(name)._2.getOrElse(org.apache.spark.sql.types.StructType(Nil)))),
+    fromFiles(name, files.map(_.path), committedSchema(name, vMeta),
       colMapOpt = Some(colMapOf(vMeta)),
       dvByOpt = Some(files.iterator.flatMap(f =>
         f.dv.map(f.path -> _)).toMap))
@@ -3982,12 +3904,13 @@ class Warehouse(val spark: SparkSession, basePath: String,
   }
 
   /** Rolls a table back to an earlier committed version by publishing
-    * that version's file list (and the schema it was committed under)
-    * as a NEW version — history stays linear and append-only, later
-    * un-vacuumed snapshots remain readable, and operational metadata
-    * (streaming high-water marks) carries forward rather than being
-    * resurrected from the past. The undo button the time-travel read
-    * implies. */
+    * that version's file list (and the schema and layout it was
+    * committed under, so later appends lay files out the way that
+    * version did) as a NEW version — history stays linear and
+    * append-only, later un-vacuumed snapshots remain readable, and
+    * operational metadata (streaming high-water marks) carries
+    * forward rather than being resurrected from the past. The undo
+    * button the time-travel read implies. */
   def restore(name: String, version: Long): Unit = {
     val (files, vMeta) = stateAt(name, version)
     requireVisible("restore", name, version, vMeta)
@@ -4006,35 +3929,13 @@ class Warehouse(val spark: SparkSession, basePath: String,
           Map(ColMapMeta -> vMeta.getOrElse(ColMapMeta, ""),
             DroppedMeta -> vMeta.getOrElse(DroppedMeta, "")), op = "restore")
     }
-    // roll the in-memory + side-meta table DEFINITION back with the
-    // data: a later append must lay files out the way this version did,
-    // not the way the rolled-over head did
-    val restoredSchema = metaSchema(vMeta)
-    restoredSchema.foreach(schemas(name) = _)
-    val restoredParts = vMeta.get(PartsMeta)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    restoredParts.foreach(partitioning(name) = _)
-    val restoredCluster = vMeta.get(ClusterMeta)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    restoredCluster.foreach(clustering(name) = _)
-    val restoredKind = vMeta.get(ClusterKindMeta)
-    restoredKind.foreach(clusterKinds(name) = _)
-    val restoredBloom = vMeta.get(BloomMeta)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    restoredBloom.foreach(bloomCols(name) = _)
-    vMeta.get(StatsByMeta)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .foreach(statsByDecl(name) = _)
-    if (restoredSchema.isDefined && restoredParts.isDefined)
-      writeMeta(name, restoredParts.get, restoredSchema.get,
-        restoredCluster.getOrElse(Nil), restoredKind.getOrElse(LinearKind),
-        restoredBloom.getOrElse(Nil))
   }
 
-  /** Drop a table: data directory, manifest log, change
-    * files, and side meta, gone in that order (manifests last, so a
-    * concurrent reader that already resolved the head either reads a
-    * complete snapshot or fails loudly — never a silent partial one).
+  /** Drop a table: data directory, change files, and manifest log
+    * (which holds the table's definition), gone in that order (the log
+    * last, so a concurrent reader that already resolved the head either
+    * reads a complete snapshot or fails loudly — never a silent partial
+    * one).
     *
     * Clone safety: refuses while any REGISTERED clone's manifests
     * still reference this table's files (drop or materialize the
@@ -4088,13 +3989,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
       fs.delete(qualifiedPath(s"$basePath/$name"), true)
       fs.delete(new org.apache.hadoop.fs.Path(
         s"$basePath/_graft_meta/changes/$name"), true)
-      Seq("partitions", "schema.json", "cluster", "clusterkind", "bloom")
-        .foreach(sfx => fs.delete(
-          new org.apache.hadoop.fs.Path(metaDir, s"$name.$sfx"), false))
       fs.delete(txnDir(name), true)
     }
-    clustering.remove(name); clusterKinds.remove(name)
-    bloomCols.remove(name); partitioning.remove(name); schemas.remove(name)
     snapshotCache.remove(name)
     spark.catalog.dropTempView(s"dw_$name")
   }
@@ -4174,7 +4070,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     val (_, files, meta) = currentManifestFull(name).getOrElse(
       throw new IllegalArgumentException(
         s"statsAggregate: $name has no committed snapshot"))
-    val sc = metaSchema(meta).getOrElse(tableSchema(name))
+    val sc = committedSchema(name, meta)
     val types = sc.map(f => f.name -> f.dataType).toMap
     cols.foreach(c => require(types.contains(c),
       s"statsAggregate: $name has no column $c"))
@@ -4325,7 +4221,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
       // column's stats — any column mapping disqualifies the fold
       if (colMapOf(meta).nonEmpty || droppedOf(meta).nonEmpty) None
       else {
-        val sc = metaSchema(meta).getOrElse(tableSchema(name))
+        val sc = committedSchema(name, meta)
         Some((files, sc.map(f => f.name -> f.dataType).toMap,
           partitionColsOf(name)))
       }
@@ -4522,7 +4418,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
     val (_, files, meta) = currentManifestFull(name).getOrElse(
       throw new IllegalArgumentException(
         s"statsAggregateBy: $name has no committed snapshot"))
-    val sc = metaSchema(meta).getOrElse(tableSchema(name))
+    val sc = committedSchema(name, meta)
     val types = sc.map(f => f.name -> f.dataType).toMap
     cols.foreach(c => require(types.contains(c),
       s"statsAggregateBy: $name has no column $c"))
@@ -4636,17 +4532,18 @@ class Warehouse(val spark: SparkSession, basePath: String,
     val (version, files, meta) = currentManifestFull(name).getOrElse(
       throw new IllegalArgumentException(
         s"describeDetail: $name has no committed snapshot"))
+    val lay = layoutOf(meta)
     Seq(
       "version" -> version.toString,
       "numFiles" -> files.size.toString,
       "numRows" -> countRows(name).map(_.toString).getOrElse(""),
       "numDeletionVectors" -> files.count(_.dv.isDefined).toString,
       "numDvDeletedRows" -> files.flatMap(_.dv).map(_.rows).sum.toString,
-      "partitionColumns" -> partitionColsOf(name).mkString(","),
-      "clusterColumns" -> clusterColsOf(name).mkString(","),
-      "clusterKind" -> clusterKindOf(name),
-      "bloomColumns" -> bloomColsOf(name).mkString(","),
-      "statsColumns" -> statsColsOf(name).mkString(","),
+      "partitionColumns" -> lay.parts.mkString(","),
+      "clusterColumns" -> lay.cluster.mkString(","),
+      "clusterKind" -> lay.kind,
+      "bloomColumns" -> lay.bloom.mkString(","),
+      "statsColumns" -> lay.stats.mkString(","),
       "checks" -> decodeChecks(meta).map(c =>
         s"${c.name}:${c.onViolation}(${c.expr})").mkString("; "),
       "clones" -> meta.getOrElse(ClonesMeta, ""),
@@ -4751,17 +4648,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
         s"cloneTable: $dst already exists")
       commitManifest(dst, repointed, carried, op = "clone")
     }
-    // side meta bootstrap, same as save()
-    val sc = metaSchema(srcMeta).getOrElse(tableSchema(src))
-    val parts = srcMeta.get(PartsMeta)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val clus = srcMeta.get(ClusterMeta)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    writeMeta(dst, parts, sc, clus,
-      srcMeta.getOrElse(ClusterKindMeta, LinearKind),
-      srcMeta.get(BloomMeta).map(_.split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq).getOrElse(Nil))
-    read(dst).createOrReplaceTempView(s"dw_$dst")
   }
 
   /** Exactly-once streaming micro-batch append. Structured
@@ -4800,9 +4686,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
           s"below the committed mark ${check.get} — stream checkpoint was " +
           "reset or two queries share this streamId; use a fresh streamId")
     else {
-      val parts = partitionColsOf(name)
       val (aligned, _) = alignDelta(name, df, allowWiden = false)
-      val files = stageWrite(name, clustered(name, aligned, parts), parts)
+      val files = stageLaidOut(name, aligned)
       withCommitLock(name) {
         // re-read under the lock: a concurrent writer may have committed
         val prev = currentManifestFull(name)
@@ -4810,7 +4695,9 @@ class Warehouse(val spark: SparkSession, basePath: String,
         if (mark.exists(_ >= batchId)) false
         else {
           commitManifest(name, prev.map(_._2).getOrElse(Nil) ++ files,
-            Map(markKey -> batchId.toString), op = "stream-append")
+            bornMeta(prev.isEmpty, aligned.schema) ++
+              Map(markKey -> batchId.toString),
+            op = "stream-append")
           true
         }
       }
@@ -5371,6 +5258,11 @@ class Warehouse(val spark: SparkSession, basePath: String,
       Map(OpMeta -> op, TimeMeta -> java.time.Instant.now.toString,
         FilesMeta -> files.size.toString, RowsMeta -> rowsTotal) ++
       (if (tx != null) Map(TxnMeta -> tx.id) else Map.empty)
+    // the manifest is the one store of a table's definition: a commit
+    // that creates the table must record it
+    if (prev.isEmpty && !meta.contains(SchemaMeta))
+      throw new IllegalStateException(
+        s"$op on $name would create it without recording its schema")
     val isCheckpoint = version == 1L || version % checkpointEvery == 0L
     val (dst, body) =
       if (isCheckpoint)
@@ -5413,9 +5305,12 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * the moved files (paths relative to the table dir, partition
     * directories included), each carrying per-file min/max stats on the
     * table's cluster columns — one extra columnar agg over JUST those
-    * columns of the files this write produced (see [[collectStats]]). */
+    * columns of the files this write produced (see [[collectStats]]).
+    * `lay` is the layout the files are written and their stats
+    * collected under: the committed one, or the one the caller's
+    * commit is about to record. */
   private def stageWrite(name: String, df0: DataFrame,
-      parts: Seq[String], mapCols: Boolean = true): Seq[DataFile] = {
+      lay: Layout, mapCols: Boolean = true): Seq[DataFile] = {
     // renamed logical columns go to disk under their frozen physical
     // names (save() resets the mapping and stages verbatim)
     val df = if (mapCols) toPhysical(name, df0) else df0
@@ -5423,7 +5318,8 @@ class Warehouse(val spark: SparkSession, basePath: String,
     val txnId = java.util.UUID.randomUUID.toString.take(8)
     val stage = qualifiedPath(s"$basePath/_graft_stage/$name-$txnId")
     val w = df.write.mode("overwrite").format(format).option("header", "true")
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).save(stage.toString)
+    (if (lay.parts.nonEmpty) w.partitionBy(lay.parts: _*) else w)
+      .save(stage.toString)
     val tableRoot = qualifiedPath(s"$basePath/$name")
     val moved = scala.collection.mutable.ArrayBuffer.empty[String]
     val it = fs.listFiles(stage, true)
@@ -5448,7 +5344,15 @@ class Warehouse(val spark: SparkSession, basePath: String,
     // under the other writer's in-flight FileOutputCommitter. Each
     // transaction's own uuid'd stage dir is removed above; the one
     // empty parent directory that remains costs nothing.
-    collectStats(name, moved.toSeq, df.schema)
+    collectStats(name, moved.toSeq, df.schema, lay)
+  }
+
+  /** Stages `df` under the table's committed layout, clustering
+    * re-applied — every rewrite or append of rows into an existing
+    * table takes this shape. */
+  private def stageLaidOut(name: String, df: DataFrame): Seq[DataFile] = {
+    val lay = layoutOf(name)
+    stageWrite(name, clustered(df, lay), lay)
   }
 
   /** Per-file min/max stats on the table's cluster columns for the
@@ -5460,10 +5364,11 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * file whose stat column is all-null carries no entry and is simply
     * never skipped — the safe direction. */
   private def collectStats(name: String, moved: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Seq[DataFile] = {
-    val statCols = (clusterColsOf(name) ++ statsColsOf(name)).distinct
+      schema: org.apache.spark.sql.types.StructType,
+      lay: Layout): Seq[DataFile] = {
+    val statCols = (lay.cluster ++ lay.stats).distinct
       .filter(schema.fieldNames.contains)
-    val bCols = bloomColsOf(name).filter(schema.fieldNames.contains)
+    val bCols = lay.bloom.filter(schema.fieldNames.contains)
     if (moved.isEmpty)
       moved.map(DataFile(_))
     else {
@@ -5679,14 +5584,15 @@ class Warehouse(val spark: SparkSession, basePath: String,
   private def statOrder(a: Any, b: Any): Int =
     a.asInstanceOf[Comparable[Any]].compareTo(b)
 
-  /** Table metadata persisted beside the data so a NEW Warehouse
-    * instance over an existing basePath (the cross-job incremental
-    * scenario) appends with the original partition layout and reads
-    * csv/json with the declared schema. Two plain files per table —
-    * no hand-rolled JSON parsing. Goes through the Hadoop FileSystem
-    * resolved from the basePath URI (NOT java.nio) so the meta lands
-    * beside the data on whatever store basePath names — HDFS, S3A, or
-    * local file:// — exactly like the data writes do. */
+  /** The warehouse's metadata root: manifest logs, change files,
+    * transaction markers. Everything that defines a table (schema,
+    * partitions, clustering, blooms) lives in its committed manifest
+    * meta there, so a NEW Warehouse instance over an existing basePath
+    * (the cross-job incremental scenario) reads and appends with the
+    * table's own definition. Goes through the Hadoop FileSystem
+    * resolved from the basePath URI (NOT java.nio) so the metadata
+    * lands beside the data on whatever store basePath names — HDFS,
+    * S3A, or local file:// — exactly like the data writes do. */
   private def metaDir = new org.apache.hadoop.fs.Path(s"$basePath/_graft_meta")
 
   /** The session's Hadoop conf, copied once per instance: a fresh
@@ -5696,50 +5602,6 @@ class Warehouse(val spark: SparkSession, basePath: String,
 
   private def metaFs: org.apache.hadoop.fs.FileSystem =
     metaDir.getFileSystem(metaConf)
-
-  private def writeMeta(name: String, parts: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      cluster: Seq[String] = Nil, clusterKind: String = LinearKind,
-      bloom: Seq[String] = Nil): Unit = {
-    val fs = metaFs
-    fs.mkdirs(metaDir)
-    def put(file: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(metaDir, file), true)
-      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    put(s"$name.partitions", parts.mkString("\n"))
-    put(s"$name.schema.json", schema.json)
-    put(s"$name.cluster", cluster.mkString("\n"))
-    put(s"$name.clusterkind", clusterKind)
-    put(s"$name.bloom", bloom.mkString("\n"))
-  }
-
-  private def loadMeta(name: String)
-      : (Seq[String], Option[org.apache.spark.sql.types.StructType],
-        Seq[String], Option[String], Seq[String]) = {
-    val fs = metaFs
-    def get(file: String): Option[String] = {
-      val p = new org.apache.hadoop.fs.Path(metaDir, file)
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally in.close()
-      } else None
-    }
-    val parts = get(s"$name.partitions")
-      .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val schema = get(s"$name.schema.json").flatMap(j =>
-      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
-    val cluster = get(s"$name.cluster")
-      .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val kind = get(s"$name.clusterkind").map(_.trim).filter(_.nonEmpty)
-    val bloom = get(s"$name.bloom")
-      .map(_.split("\n").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    (parts, schema, cluster, kind, bloom)
-  }
 
   def table(name: String): DataFrame = read(name)
 
@@ -5757,12 +5619,10 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * query on a clustered column touches a few files out of tens of
     * thousands without any index structure. */
   def scan(name: String, ranges: ColRange*): DataFrame = {
-    val df = currentManifestFull(name) match {
-      case Some((_, files, meta)) =>
-        val sc = metaSchema(meta).getOrElse(tableSchema(name))
-        fromFiles(name, candidates(files, sc, ranges).map(_.path), sc)
-      case None => read(name) // pre-manifest layout: no stats, no pruning
-    }
+    val (_, files, meta) = currentManifestFull(name).getOrElse(
+      throw new IllegalArgumentException(s"$name has no committed snapshot"))
+    val sc = committedSchema(name, meta)
+    val df = fromFiles(name, candidates(files, sc, ranges).map(_.path), sc)
     ranges.foldLeft(df) { (d, r) =>
       val lo = r.lower.map(v => col(r.column) >= lit(v))
       val hi = r.upper.map(v => col(r.column) <= lit(v))
@@ -5783,7 +5643,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
       predicate: org.apache.spark.sql.Column): (Int, Int) = {
     currentManifestFull(name) match {
       case Some((_, files, meta)) =>
-        val sc = metaSchema(meta).getOrElse(tableSchema(name))
+        val sc = committedSchema(name, meta)
         (candidatesWith(files, sc, derivedRanges(predicate, sc),
           derivedInSets(predicate, sc),
           derivedNullness(predicate, sc)).size, files.size)
@@ -5794,7 +5654,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def scanFileCounts(name: String, ranges: Seq[ColRange]): (Int, Int) = {
     currentManifestFull(name) match {
       case Some((_, files, meta)) =>
-        val sc = metaSchema(meta).getOrElse(tableSchema(name))
+        val sc = committedSchema(name, meta)
         (candidates(files, sc, ranges).size, files.size)
       case None => (0, 0)
     }
@@ -5810,7 +5670,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def dvScanStats(name: String, ranges: Seq[ColRange] = Nil): (Int, Int, Long) = {
     currentManifestFull(name) match {
       case Some((_, files, meta)) =>
-        val sc = metaSchema(meta).getOrElse(tableSchema(name))
+        val sc = committedSchema(name, meta)
         val admitted = candidates(files, sc, ranges)
         (admitted.size, admitted.count(_.dv.isDefined),
           admitted.flatMap(_.dv).map(_.rows).sum)

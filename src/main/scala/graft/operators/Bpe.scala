@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   *    pair statistics (a lazy max-heap + per-pair affected-word
   *    index, the classic subword-nmt structure). A 32k-merge
   *    production vocabulary is seconds of driver CPU, not 64k Spark
-  *    jobs. [[trainDistributed]] keeps the original
-  *    one-Spark-round-per-merge lane as a cross-check; BpeSpec
+  *    jobs. The original one-Spark-round-per-merge lane lives in
+  *    test scope (`BpeDistributed`) as a cross-check; BpeSpec
   *    asserts the two produce identical merge sequences.
   *  - ENCODING is one map-side projection: wrap → `nMerges` chained
   *    codegen'd `replace`s → unwrap. No shuffle, no UDF, no state.
@@ -97,24 +97,13 @@ object Bpe {
       .groupBy("word").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("word")).limit(maxWords)
 
-  /** Adjacent symbol pairs of each word, weighted by the word's
-    * frequency — the per-round statistic of the distributed lane. */
-  private def pairCounts(words: DataFrame): DataFrame = {
-    val sym = symbols(col("w"))
-    words
-      .select(col("n"), explode(arrays_zip(
-        slice(sym, lit(1), size(sym) - 1),
-        slice(sym, lit(2), size(sym) - 1))).as("p"))
-      .select(col("p.0").as("a"), col("p.1").as("b"), col("n"))
-      .groupBy("a", "b").agg(sum("n").as("c"))
-  }
-
   /** Code-point comparison — identical to Spark's UTF8String binary
     * (UTF-8 byte) order, which `orderBy` on strings uses. Java's
     * `String.compareTo` is UTF-16 code-UNIT order and disagrees on
     * supplementary characters vs U+E000..U+FFFF, so the driver-side
-    * tie-break must not use it or [[train]] and [[trainDistributed]]
-    * could diverge on non-BMP vocabularies. */
+    * tie-break must not use it or [[train]] and its distributed
+    * cross-check lane (test scope, `BpeDistributed`) could diverge on
+    * non-BMP vocabularies. */
   private[operators] def cpCompare(x: String, y: String): Int = {
     var i = 0; var j = 0
     while (i < x.length && j < y.length) {
@@ -275,38 +264,6 @@ object Bpe {
     merges.result()
   }
 
-  /** The original one-Spark-round-per-merge trainer, kept as the
-    * distributed CROSS-CHECK of [[train]] (BpeSpec asserts identical
-    * merge sequences): per round, count adjacent pairs over the
-    * re-checkpointed bounded word table, pick the most frequent
-    * (c DESC, a ASC, b ASC), fold it into every word, repeat. Not the
-    * production path — a 32k-merge vocabulary would be ~64k Spark
-    * jobs for driver-memory-sized work. */
-  private[graft] def trainDistributed(docs: DataFrame, nMerges: Int,
-      maxWords: Int = 100000): Seq[(String, String)] = {
-    var words = wordFreqs(docs, maxWords)
-      .select(wrapWord(col("word")).as("w"), col("n"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(String, String)]
-    var done = false
-    var i = 0
-    while (i < nMerges && !done) {
-      val best = pairCounts(words)
-        .orderBy(col("c").desc, col("a"), col("b")).limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val (a, b) = (best(0).getString(0), best(0).getString(1))
-        merges += ((a, b))
-        val prev = words
-        words = words.select(applyMerge(col("w"), a, b).as("w"), col("n"))
-          .localCheckpoint()
-        prev.unpersist()
-      }
-      i += 1
-    }
-    merges.result()
-  }
-
   /** Whole-document encode as ONE string expression: wrap every
     * word (tokenized through [[cleanTokens]] — same lane as
     * training), join with spaces (a space between wraps blocks
@@ -432,7 +389,7 @@ object Bpe {
     // depends on the table after merge k-1), so not SQL-expressible as
     // one query → rows-only here; BpeSpec pins the exact merge
     // sequence on the classic hand-computable corpus, the determinism
-    // of the tie-break, and train ≡ trainDistributed.
+    // of the tie-break, and train ≡ the distributed cross-check lane.
     Q("t20_bpe_train", None, (s, d) => {
       import s.implicits._
       train(T.documents(s, d), nMerges = 25)

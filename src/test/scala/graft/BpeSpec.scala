@@ -45,11 +45,11 @@ class BpeSpec extends AnyFunSuite {
     // prefix — the incremental heap/index bookkeeping must reproduce
     // the per-round recount exactly, ties included
     val inMem = Bpe.train(classic, nMerges = 12)
-    val dist = Bpe.trainDistributed(classic, nMerges = 12)
+    val dist = BpeDistributed.trainDistributed(classic, nMerges = 12)
     assert(inMem == dist)
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     assert(Bpe.train(docs, nMerges = 10) ==
-      Bpe.trainDistributed(docs, nMerges = 10))
+      BpeDistributed.trainDistributed(docs, nMerges = 10))
   }
 
   test("a 1k+ merge vocabulary trains in seconds, not Spark jobs") {

@@ -65,7 +65,8 @@ class CloneSpec extends AnyFunSuite {
     wh.vacuum("src", graceMs = 0L, keepVersions = 1)
     assert(wh.table("fork").count() == 3901)
     assert(wh.table("src").count() == 4000)
-    // a fresh instance reads the clone the same way (side-meta bootstrap)
+    // a fresh instance reads the clone the same way (its manifest
+    // carries the definition)
     val wh2 = new Warehouse(spark, dir)
     assert(wh2.table("fork").count() == 3901)
   }

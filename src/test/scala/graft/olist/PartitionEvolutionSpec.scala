@@ -130,4 +130,60 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     spark.sql("INSERT INTO t VALUES (3, 'c', 'apac')")
     assert(spark.sql("SELECT count(*) FROM dw_t").collect()(0).getLong(0) == 3L)
   }
+
+  test("layout lives in the manifest: another instance's appends follow repartition, recluster and restore") {
+    import spark.implicits._
+    val dir = tmp("wh_layout_xinst")
+    val a = new Warehouse(spark, dir)
+    val b = new Warehouse(spark, dir)
+    def batch(id: Long, year: Int) = Seq((id, year, s"d$id")).toDF("id", "year", "d")
+    // b's append adds exactly these manifest entries
+    def appendedBy(id: Long, year: Int): Seq[Warehouse.DataFile] = {
+      val before = b.currentManifestFiles("t").map(_.path).toSet
+      b.append("t", batch(id, year))
+      b.currentManifestFiles("t").filterNot(f => before.contains(f.path))
+    }
+    a.save("t", batch(1L, 2021).coalesce(1))
+    assert(appendedBy(2L, 2021).forall(f => !f.path.contains("=")))
+    val flatVersion = a.tableVersions("t").last
+    a.repartitionTable("t", Seq("year"))
+    val partitioned = appendedBy(3L, 2022)
+    assert(partitioned.nonEmpty && partitioned.forall(_.path.startsWith("year=2022/")),
+      partitioned.map(_.path))
+    a.recluster("t", Seq("id"), bloomBy = Seq("d"))
+    val bloomed = appendedBy(4L, 2022)
+    assert(bloomed.nonEmpty && bloomed.forall(f =>
+      f.path.startsWith("year=2022/") && f.blooms.contains("d") &&
+        f.stats.contains("id")), bloomed.map(f => (f.path, f.blooms.keySet)))
+    a.restore("t", flatVersion)
+    val restored = appendedBy(5L, 2023)
+    assert(restored.nonEmpty && restored.forall(f =>
+      !f.path.contains("=") && f.blooms.isEmpty),
+      restored.map(f => (f.path, f.blooms.keySet)))
+    assert(a.table("t").select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 5L))
+  }
+
+  test("a fresh instance reads and appends with the committed layout alone, no side files") {
+    import spark.implicits._
+    val dir = tmp("wh_layout_fresh")
+    val wh = new Warehouse(spark, dir)
+    wh.save("t", Seq((1L, 2021, "x"), (2L, 2022, "y")).toDF("id", "year", "d"),
+      partitionBy = Seq("year"), clusterBy = Seq("id"), bloomBy = Seq("d"))
+    // any per-table definition file beside the manifests is deleted:
+    // the manifest alone must carry schema and layout
+    val side = Seq("partitions", "schema.json", "cluster", "clusterkind", "bloom")
+    side.foreach(sfx => new java.io.File(s"$dir/_graft_meta/t.$sfx").delete())
+    val fresh = new Warehouse(spark, dir)
+    assert(fresh.table("t").schema.map(f => f.name -> f.dataType) ==
+      wh.table("t").schema.map(f => f.name -> f.dataType))
+    val before = fresh.currentManifestFiles("t").map(_.path).toSet
+    fresh.append("t", Seq((3L, 2023, "z")).toDF("id", "year", "d"))
+    val added = fresh.currentManifestFiles("t").filterNot(f => before.contains(f.path))
+    assert(added.nonEmpty && added.forall(f => f.path.startsWith("year=2023/") &&
+      f.stats.contains("id") && f.blooms.contains("d")),
+      added.map(f => (f.path, f.blooms.keySet)))
+    assert(fresh.table("t").filter(col("year") === 2023).count() == 1L)
+    assert(side.forall(sfx => !new java.io.File(s"$dir/_graft_meta/t.$sfx").exists()))
+  }
 }

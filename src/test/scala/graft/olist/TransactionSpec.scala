@@ -402,4 +402,22 @@ class TransactionSpec extends AnyFunSuite {
     assert(refused.getMessage.contains("retention horizon"),
       refused.getMessage)
   }
+
+  test("dw_ view: a save inside a transaction stays invisible to other threads until the commit") {
+    val dir = tmp("wh_txn_view")
+    val wh = new Warehouse(spark, dir)
+    wh.save("t", Seq(1L, 2L).toDF("k").coalesce(1))
+    def countElsewhere(): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong(-1L)
+      val th = new Thread(() => n.set(spark.table("dw_t").count()))
+      th.start(); th.join()
+      n.get
+    }
+    assert(countElsewhere() == 2L)
+    wh.transaction(Seq("t")) {
+      wh.save("t", Seq(1L, 2L, 3L).toDF("k").coalesce(1))
+      assert(countElsewhere() == 2L, "dw_t exposed the half-landed batch")
+    }
+    assert(countElsewhere() == 3L)
+  }
 }
