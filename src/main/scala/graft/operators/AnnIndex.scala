@@ -1038,8 +1038,9 @@ object AnnIndex {
   /** [[hybridQueryBatch]] for LITERAL queries — the full
     * retrieval-service front door: each query arrives as (query_id,
     * raw query TEXT, raw query VECTOR). The sparse lane tokenizes the
-    * text through the index's own tokenizer ([[TextIndex
-    * .tokenizeQueries]] — a LocalRelation, no corpus read); the dense
+    * text through the index's own tokenizer, evaluated on the driver
+    * ([[TextIndex.tokenizer]] via [[TextIndex.tokenizeQueries]] — no
+    * query execution, no corpus read); the dense
     * lane normalizes the vector through the index's own normalizer
     * ([[normalizedQueryVecs]] — same); both lanes read ONE pinned
     * snapshot cut across all six serving tables, and the fusion is

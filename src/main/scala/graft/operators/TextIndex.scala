@@ -1,8 +1,14 @@
 package graft.operators
 
 import graft.olist.Warehouse
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Warehouse-maintained INVERTED index — the sparse-retrieval twin of
   * [[AnnIndex]]: t18's BM25 recomputes corpus statistics and scans
@@ -533,29 +539,15 @@ object TextIndex {
     * ONE snapshot cut, and the amortization path for a serving
     * deployment holding one [[servingSnapshot]] across many calls.
     * The plan for ONE query — SQL `SEARCH INDEX` serves through it:
-    * one per-doc pivot shuffle and an `orderBy(…).limit(k)` that
-    * plans as a TakeOrderedAndProject; [[queryBatchOn]] is for N
-    * queries at once. */
+    * the corpus statistics arrive in one shuffle- and join-free
+    * collect ([[corpusStats]]), then the returned top-k plan has one
+    * per-doc pivot shuffle and an `orderBy(…).limit(k)` that plans as
+    * a TakeOrderedAndProject; [[queryBatchOn]] is for N queries at
+    * once. */
   def queryOn(read: String => DataFrame, idx: String,
       terms: Seq[String], k: Int,
       docFilter: Option[DataFrame] = None): DataFrame = {
-    // segment sum per query term: ≤|terms| distinct terms' rows read
-    // (term-pruned like the postings), summed here — a term whose
-    // segments net to ≤0 no longer exists. The 1-row stats table
-    // rides the SAME job (r17: stats first() + df collect were two
-    // sequential driver round-trips; a right-outer join against the
-    // always-one-row stats ships both in one scheduling round — the
-    // stats row survives even when no query term is indexed)
-    val stDfs = read(s"${idx}_df")
-      .filter(col("term").isin(terms: _*))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
-      .join(read(s"${idx}_stats"), lit(true), "right_outer")
-      .collect()
-    val st = org.apache.spark.sql.Row(
-      stDfs.head.getAs[Long]("n"), stDfs.head.getAs[Long]("sum_dl"))
-    val dfs = stDfs.filter(_.getAs[String]("term") != null)
-      .map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
+    val (n, sumDl, dfs) = corpusStats(read, idx, terms)
     // docFilter (filtered search, the AnnIndex.query(filter=…) twin):
     // a (doc_id, …) allowlist frame semi-joined onto the matched
     // postings BEFORE scoring, so the k results all satisfy it —
@@ -575,8 +567,7 @@ object TextIndex {
     }
     // corpus stats and per-term df as literals in ONE projection (a
     // withColumn chain re-analyzes the plan once per column)
-    val statCols = lit(st.getLong(0)).as("n") +:
-      lit(st.getLong(1)).as("sum_dl") +:
+    val statCols = lit(n).as("n") +: lit(sumDl).as("sum_dl") +:
       terms.zipWithIndex.map { case (t, i) =>
         lit(dfs.getOrElse(t, 0L)).as(s"df$i")
       }
@@ -623,10 +614,9 @@ object TextIndex {
     * was built with ([[TextAnalysis.tokens]] over lowercased text —
     * [[analyzed]]'s exact expression) or scoring silently diverges on
     * any text the two tokenizations split differently. The
-    * tokenization runs the shared Column expression over a
-    * |queries|-row LOCAL frame (a LocalRelation — no corpus table is
-    * touched to derive the terms; [[tokenizeQueries]]); a query whose
-    * text tokenizes to nothing refuses loudly like the term form. */
+    * tokenization evaluates that expression on the driver, no corpus
+    * table touched ([[tokenizeQueries]]); a query whose text tokenizes
+    * to nothing refuses loudly like the term form. */
   def queryTextBatch(wh: Warehouse, idx: String,
       queries: Seq[(Long, String)], k: Int,
       docFilter: Option[DataFrame] = None,
@@ -635,18 +625,14 @@ object TextIndex {
       docFilter, saltParts)
 
   /** (query_id, tokens) for raw query strings through the INDEX's own
-    * tokenizer — the identical `tokens(lower(text))` Column [[analyzed]]
-    * indexes documents with, evaluated over a bounded LOCAL frame
-    * (plan-asserted scan-free in TextIndexSpec). */
+    * tokenizer ([[tokenizer]]). */
   private[graft] def tokenizeQueries(
       spark: org.apache.spark.sql.SparkSession,
       queries: Seq[(Long, String)]): Seq[(Long, Seq[String])] = {
     require(queries.nonEmpty, "queryTextBatch: empty query list")
-    import spark.implicits._
-    val byId = tokenizedFrame(spark, queries)
-      .as[(Long, Seq[String])].collect().toMap
-    queries.map { case (qid, _) =>
-      val ts = byId(qid)
+    val tokenize = tokenizer(spark)
+    queries.map { case (qid, text) =>
+      val ts = tokenize(text)
       // a blank query splits to [""] — no real term; refuse loudly
       // like the term form (it would silently return nothing)
       require(ts.exists(_.nonEmpty),
@@ -656,15 +642,57 @@ object TextIndex {
     }
   }
 
-  /** The tokenization plan itself, exposed for the scan-free plan
-    * assertion: a LocalRelation projection, never a table read. */
-  private[graft] def tokenizedFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      queries: Seq[(Long, String)]): DataFrame = {
-    import spark.implicits._
-    queries.toDF("query_id", "qtext")
-      .select(col("query_id"),
-        TextAnalysis.tokens(lower(col("qtext"))).as("ts"))
+  /** The index's tokenizer as a driver-side function: the identical
+    * `tokens(lower(text))` Column [[analyzed]] indexes documents with,
+    * analyzed once in `spark`'s session over one string column, bound,
+    * and evaluated on one InternalRow per text — the interpreted
+    * evaluation `ConvertToLocalRelation` gives a local frame, without
+    * an optimizer pass, physical plan, encoder or collect. NULL text
+    * has no tokens. */
+  private[graft] def tokenizer(
+      spark: org.apache.spark.sql.SparkSession): String => Seq[String] = {
+    val analyzedPlan = spark.createDataFrame(
+        java.util.Collections.emptyList[Row](),
+        StructType(Seq(StructField("qtext", StringType))))
+      .select(TextAnalysis.tokens(lower(col("qtext"))).as("ts"))
+      .queryExecution.analyzed
+    val bound = analyzedPlan match {
+      case Project(Seq(Alias(e, _)), child) =>
+        BindReferences.bindReference(e, child.output)
+    }
+    text => bound.eval(InternalRow(UTF8String.fromString(text))) match {
+      case null => Seq.empty
+      case ts: ArrayData =>
+        Seq.tabulate(ts.numElements())(ts.getUTF8String(_).toString)
+    }
+  }
+
+  /** The corpus statistics one BM25 call scores against: (n, sum_dl)
+    * from the one-row `_stats` table, and each query term's df summed
+    * over its `_df` segment rows — a term whose segments net to ≤ 0 no
+    * longer exists and is dropped. ONE collect of the union of the two
+    * pinned scans: the df read is term-pruned like the postings, and
+    * the plan has no shuffle and no join — the ≤ |terms| × segments
+    * rows are summed here (Long addition, exact in any order). A
+    * `_stats` table not holding exactly one row fails loudly, naming
+    * the index. */
+  private def corpusStats(read: String => DataFrame, idx: String,
+      terms: Seq[String]): (Long, Long, Map[String, Long]) = {
+    val rows = read(s"${idx}_df")
+      .filter(col("term").isin(terms.distinct: _*))
+      .select("term", "df")
+      .unionByName(read(s"${idx}_stats").select("n", "sum_dl"),
+        allowMissingColumns = true)
+      .collect()
+    // the IN filter drops NULL terms, so a row without one is stats
+    val (dfRows, stRows) = rows.partition(r => !r.isNullAt(0))
+    if (stRows.length != 1) throw new IllegalStateException(
+      s"search index $idx: ${idx}_stats holds ${stRows.length} rows, " +
+        "not the one (n, sum_dl) row BM25 scores against — the " +
+        "index's corpus statistics are malformed")
+    val dfs = dfRows.groupMapReduce(_.getAs[String]("term"))(
+      _.getAs[Long]("df"))(_ + _).filter(_._2 > 0)
+    (stRows.head.getAs[Long]("n"), stRows.head.getAs[Long]("sum_dl"), dfs)
   }
 
   /** [[queryBatch]] against an externally-pinned read surface (the
@@ -686,19 +714,7 @@ object TextIndex {
         "nothing; the single-query form refuses it too)")
     import spark.implicits._
     val allTerms = queries.flatMap(_._2).distinct
-    // one job ships the per-term df sums AND the 1-row stats (the
-    // right-outer trick queryOn uses — r17, one scheduling round
-    // instead of two)
-    val stDfs = read(s"${idx}_df")
-      .filter(col("term").isin(allTerms: _*))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
-      .join(read(s"${idx}_stats"), lit(true), "right_outer")
-      .collect()
-    val st = org.apache.spark.sql.Row(
-      stDfs.head.getAs[Long]("n"), stDfs.head.getAs[Long]("sum_dl"))
-    val dfs = stDfs.filter(_.getAs[String]("term") != null)
-      .map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
+    val (n, sumDl, dfs) = corpusStats(read, idx, allTerms)
     // (query_id, term-index, term, df) — broadcast; ti preserves each
     // query's term order so the score fold adds in query()'s order
     val qterms = queries.flatMap { case (qid, terms) =>
@@ -719,11 +735,11 @@ object TextIndex {
       .agg(sum(col("tf")).as("tf"))
     // the per-term contribution — bm25ScoreExpr's termScore verbatim,
     // with df a broadcast column instead of a pivoted literal
-    val avgdl = lit(st.getLong(1)).cast("double") / lit(st.getLong(0))
+    val avgdl = lit(sumDl).cast("double") / lit(n)
     val lenNorm = lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / avgdl))
     val contrib = tfAgg.join(broadcast(qterms), Seq("term"))
       .select(col("query_id"), col("doc_id"), col("dl"), col("ti"),
-        (log((lit(2) * lit(st.getLong(0)) + 2).cast("double") /
+        (log((lit(2) * lit(n) + 2).cast("double") /
           (lit(2) * col("df") + 1)) *
           ((col("tf") * lit(2.2)) / (col("tf") + lenNorm))).as("c"))
     val scored = contrib.groupBy("query_id", "doc_id", "dl")

@@ -45,7 +45,12 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * A `SEARCH INDEX` statement carries one query, so it runs
   * [[graft.operators.TextIndex.queryOn]]'s single-query plan (one
   * per-doc pivot shuffle, a TakeOrderedAndProject top-k), never the
-  * N-query batch plan (`queryBatchOn`). */
+  * N-query batch plan (`queryBatchOn`). Parsing it does real work:
+  * the snapshot pin, the driver-side tokenize, and ONE query
+  * execution — the shuffle- and join-free df/stats read — all run
+  * inside `parsePlan`. The outer statement's QueryPlanningTracker
+  * counts that time in its `parsing` phase; it is not Catalyst
+  * planning. The plan returned is the top-k alone. */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
@@ -399,8 +404,9 @@ object GraftSqlParser {
     .toFormatter
 
   /** The plan of one `SEARCH INDEX` statement: the text through the
-    * index's own tokenizer, then the single-query BM25 plan (see the
-    * class doc). Output (doc_id, dl, score), (score desc, doc_id). */
+    * index's own tokenizer (evaluated on the driver), then the
+    * single-query BM25 plan (see the class doc). Output (doc_id, dl,
+    * score), (score desc, doc_id). */
   private def searchPlan(session: SparkSession,
       read: String => DataFrame, idx: String,
       text: String, k: Int,

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * BM25 bit-for-bit, exact incremental maintenance, term-pruned
   * postings reads. */
 class TextIndexSpec extends AnyFunSuite {
+  import TextIndexSpec.tokenizedFrame
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkTestSession.spark
 
@@ -304,9 +305,9 @@ class TextIndexSpec extends AnyFunSuite {
     val byText = rows(TextIndex.queryTextBatch(wh, "ti", textQueries, 10))
     assert(byText == byTerms,
       s"text form ≠ term form:\ntext=$byText\nterm=$byTerms")
-    // the tokenization is a LocalRelation projection — no table read
-    // anywhere in the query-term derivation
-    val dScans = TextIndex.tokenizedFrame(spark, textQueries)
+    // the tokenization oracle is a LocalRelation projection — no table
+    // read anywhere in the query-term derivation
+    val dScans = tokenizedFrame(spark, textQueries)
       .queryExecution.sparkPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
@@ -316,6 +317,53 @@ class TextIndexSpec extends AnyFunSuite {
       TextIndex.queryTextBatch(wh, "ti", Seq((9L, "   ")), 10)
     }
     assert(e.getMessage.contains("tokenizes to no terms"))
+  }
+
+  test("the driver-side tokenizer ≡ tokenizedFrame ≡ the terms build stored in _postings, on adversarial text; blank text refuses") {
+    val wh = new Warehouse(spark, tmp("ti_tok"))
+    import spark.implicits._
+    // Unicode case mappings (dotted capital I, final sigma, sharp s,
+    // ligatures), whitespace Spark's trim keeps (it strips only
+    // U+0020: tab and newline inside and at the edges; NBSP, which
+    // the \s+ split does not split on either), punctuation, repeated
+    // terms, blank and whitespace-only text
+    val texts = Seq(
+      "İstanbul İİ", "ΣΊΣΥΦΟΣ ΟΔΟΣ", "Straße STRASSE ß", "ﬁle ﬂow Ǆ",
+      "\tlead tab", "trail tab\t", "in\ttab", "\u00a0nbsp\u00a0edge\u00a0",
+      "in\u00a0nbsp", "\nline\nbreak\n", " \r\n mixed \t ",
+      "punct, end. (paren) don't e-mail!", "rep rep REP Rep rep",
+      "", "   ", "\t", " \t\n ", "\u00a0")
+    val byId = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    TextIndex.build(wh, "ti", byId.toDF("doc_id", "text"))
+    // each doc's stored token sequence: its terms placed at their
+    // positions (the executors' codegen tokenize at build time)
+    val stored = wh.table("ti_postings").collect()
+      .groupBy(_.getAs[Long]("doc_id")).map { case (id, rs) =>
+        id -> rs.toSeq.flatMap(r => r.getSeq[Int](r.fieldIndex("pos"))
+          .map(_ -> r.getAs[String]("term"))).sortBy(_._1).map(_._2)
+      }
+    val oracle = tokenizedFrame(spark, byId)
+      .as[(Long, Seq[String])].collect().toMap
+    val tokenize = TextIndex.tokenizer(spark)
+    byId.foreach { case (id, t) =>
+      val got = tokenize(t)
+      assert(got == oracle(id), s"≠ tokenizedFrame for ${t.toSeq}")
+      assert(got == stored(id), s"≠ stored postings for ${t.toSeq}")
+      if (got.exists(_.nonEmpty))
+        assert(TextIndex.tokenizeQueries(spark, Seq((7L, t))) ==
+          Seq((7L, got)))
+      else {
+        val e = intercept[IllegalArgumentException] {
+          TextIndex.tokenizeQueries(spark, Seq((7L, t)))
+        }
+        assert(e.getMessage.contains("query 7 tokenizes to no terms"),
+          e.getMessage)
+      }
+    }
+    // the fixture exercises both sides of the refusal, and Spark's
+    // trim keeping a tab yields an empty leading term that build stores
+    assert(texts.count(t => !tokenize(t).exists(_.nonEmpty)) == 4)
+    assert(stored(4L) == Seq("", "lead", "tab"), stored(4L).toString)
   }
 
   test("foldTombstones: dead guards fold, live ones survive; refresh still cannot resurrect; count bounded across cycles") {
@@ -500,5 +548,21 @@ class TextIndexSpec extends AnyFunSuite {
     assert(res.exists(r => r._1 == "df_segments" && r._2 == "error"),
       res.toString)
     assert(res.head._2 == "error", res.toString)
+  }
+}
+
+object TextIndexSpec {
+
+  /** The parity oracle for [[TextIndex.tokenizer]]: the index's
+    * tokenizer Column over a LocalRelation of (query_id, qtext) — the
+    * tokenization plan the serving path ran before it tokenized on the
+    * driver. */
+  def tokenizedFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      queries: Seq[(Long, String)]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    queries.toDF("query_id", "qtext")
+      .select(col("query_id"),
+        TextAnalysis.tokens(lower(col("qtext"))).as("ts"))
   }
 }

@@ -800,20 +800,29 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(gotHF == apiHF && gotHF.forall(r => labeled.contains(r._1)))
   }
 
-  test("SEARCH INDEX plans one query: no window, collect_list fold or range sort in the plain or filtered plan") {
-    val dir = tmp("sql_search_plan")
-    val wh = new Warehouse(spark, dir)
+  /** A bound warehouse with a 40-doc synthetic `docs` table and its
+    * search index `ti` — the plan-shape tests' fixture (a plan's shape
+    * does not depend on the data). */
+  private def searchFixture(prefix: String): Warehouse = {
+    val wh = new Warehouse(spark, tmp(prefix))
     wh.enableSql()
     import spark.implicits._
-    // a synthetic corpus: the plan's shape does not depend on the data
     wh.save("docs", (0L until 40L).map { i =>
       (i, "vector " * (1 + (i % 3).toInt) + "stream merge" +
         " pad" * (i % 7).toInt)
     }.toDF("doc_id", "text"))
     spark.sql("CREATE SEARCH INDEX ti ON docs").collect()
-    for (q <- Seq("SEARCH INDEX ti FOR 'vector stream merge' TOP 10",
-        "SEARCH INDEX ti ON docs FOR 'vector stream merge' TOP 10 " +
-          "WHERE doc_id % 2 = 0")) {
+    wh
+  }
+
+  private val searchStatements = Seq(
+    "SEARCH INDEX ti FOR 'vector stream merge' TOP 10",
+    "SEARCH INDEX ti ON docs FOR 'vector stream merge' TOP 10 " +
+      "WHERE doc_id % 2 = 0")
+
+  test("SEARCH INDEX plans one query: no window, collect_list fold or range sort in the plain or filtered plan") {
+    searchFixture("sql_search_plan")
+    for (q <- searchStatements) {
       val df = spark.sql(q)
       assert(df.collect().length == 10, q)
       val p = df.queryExecution.executedPlan.toString
@@ -821,6 +830,53 @@ class SqlSurfaceSpec extends AnyFunSuite {
       assert(!p.contains("Window"), p)
       assert(!p.contains("collect_list"), p)
       assert(!p.toLowerCase.contains("rangepartitioning"), p)
+    }
+  }
+
+  test("SEARCH INDEX parses with ONE query execution, the df/stats read, and its plan has no Exchange and no Join (plain and filtered)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graft.ListenerBusDrain
+    searchFixture("sql_search_parse")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          ns: Long): Unit = { seen.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = { seen.add(qe); () }
+    }
+    object Plans extends
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    spark.listenerManager.register(listener)
+    try for (q <- searchStatements) {
+      ListenerBusDrain(spark) // nothing earlier is still in flight
+      seen.clear()
+      val df = spark.sql(q)
+      ListenerBusDrain(spark)
+      val during = seen.toArray(Array.empty[QueryExecution]).toSeq
+      assert(during.size == 1, s"$q ran ${during.size} query " +
+        s"executions while parsing:\n${during.map(_.executedPlan)
+          .mkString("\n")}")
+      val plan = during.head.executedPlan
+      val shuffled = Plans.collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }
+      assert(shuffled.isEmpty, s"$q: the parse-time read\n$plan")
+      assert(df.collect().length == 10, q)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("SEARCH INDEX over a stats table without exactly one row fails loudly, naming the index and its stats table") {
+    val wh = searchFixture("sql_search_badstats")
+    import spark.implicits._
+    for (bad <- Seq(Seq.empty[(Long, Long)], Seq((40L, 400L), (41L, 410L)))) {
+      wh.save("ti_stats", bad.toDF("n", "sum_dl"))
+      for (q <- searchStatements) {
+        val e = intercept[IllegalStateException](spark.sql(q))
+        assert(e.getMessage.contains("search index ti:") &&
+          e.getMessage.contains(s"ti_stats holds ${bad.size} rows"),
+          e.getMessage)
+      }
     }
   }
 
