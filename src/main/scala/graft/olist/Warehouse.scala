@@ -3397,24 +3397,29 @@ class Warehouse(val spark: SparkSession, basePath: String,
     * and pinning refuses loudly (pinVersion's retention check) —
     * never a dangling reader. */
   def holdSnapshot(names: Seq[String], holder: String)
-      : (Map[String, DataFrame], () => Unit) = {
+      : (Map[String, DataFrame], () => Unit) =
+    (holdCut(names, holder, None),
+      () => names.foreach(n => unpinVersion(n, holder)))
+
+  /** The body both holds share: resolve one cut, pin every member for
+    * `holder` (with `leaseMs` when leased), then build the pinned
+    * readers. Pins are taken member-by-member, UNWINDING on failure: if
+    * a later member's pin refuses (a vacuum reaped its version between
+    * resolution and pinning — the documented loud path), pins already
+    * committed on earlier members must not be orphaned — an abandoned
+    * pin shields retention forever with no holder alive to release it. */
+  private def holdCut(names: Seq[String], holder: String,
+      leaseMs: Option[Long]): Map[String, DataFrame] = {
     val cut = snapshotVersions(names)
-    // pin member-by-member, UNWINDING on failure: if a later member's
-    // pin refuses (a vacuum reaped its version between resolution and
-    // pinning — the documented loud path), pins already committed on
-    // earlier members must not be orphaned — an abandoned pin shields
-    // retention forever with no holder alive to release it
     val pinned = scala.collection.mutable.ListBuffer.empty[String]
     try cut.foreach { case (n, v) =>
-      pinVersion(n, v, holder); pinned += n
+      pinVersion(n, v, holder, leaseMs); pinned += n
     } catch {
       case e: Throwable =>
-        pinned.foreach(n =>
-          scala.util.Try(unpinVersion(n, holder)))
+        pinned.foreach(n => scala.util.Try(unpinVersion(n, holder)))
         throw e
     }
-    (cut.map { case (n, v) => n -> tableAt(n, v) },
-      () => names.foreach(n => unpinVersion(n, holder)))
+    cut.map { case (n, v) => n -> tableAt(n, v) }
   }
 
   /** [[holdSnapshot]] with a LEASE — the crash-safe deployment shape:
@@ -3431,16 +3436,7 @@ class Warehouse(val spark: SparkSession, basePath: String,
   def holdSnapshotLeased(names: Seq[String], holder: String,
       leaseMs: Long): (Map[String, DataFrame], () => Unit, () => Unit) = {
     require(leaseMs > 0, "holdSnapshotLeased: leaseMs must be positive")
-    val cut = snapshotVersions(names)
-    val pinned = scala.collection.mutable.ListBuffer.empty[String]
-    try cut.foreach { case (n, v) =>
-      pinVersion(n, v, holder, Some(leaseMs)); pinned += n
-    } catch {
-      case e: Throwable =>
-        pinned.foreach(n => scala.util.Try(unpinVersion(n, holder)))
-        throw e
-    }
-    (cut.map { case (n, v) => n -> tableAt(n, v) },
+    (holdCut(names, holder, Some(leaseMs)),
       () => names.foreach(n => refreshPin(n, holder)),
       () => names.foreach(n => unpinVersion(n, holder)))
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.olist.Warehouse
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Warehouse-maintained IVF-PQ index — the piece that turns e13's
@@ -64,8 +64,8 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  import Similarity.{codesCol, cellCol, collectCents, l2sq, l2Normalized,
-    trainingSample, defaultSampleN, pqTrain}
+  import Similarity.{Cents, codesCol, cellCol, centsFrame, collectCents,
+    l2sq, l2Normalized, trainIvfPq}
 
   /** The serving defaults, as NAMED constants: every probe signature
     * below defaults to these, and the SQL surface (`DESCRIBE VECTOR
@@ -79,12 +79,11 @@ object AnnIndex {
     * shuffle-free projection pass against stored codebooks. `dim`
     * comes from the caller (corpus at build, CODEBOOK at refresh — so
     * an empty delta never needs a row to infer the width from). */
-  private def encode(unit: DataFrame, coarse: DataFrame,
-      codebook: DataFrame, m: Int, dim: Int): DataFrame = {
+  private def encode(unit: DataFrame, coarse: Cents, codebook: Cents,
+      m: Int, dim: Int): DataFrame =
     unit.select(col("vec_id"),
-      cellCol(collectCents(coarse), dim).as("cell"),
-      codesCol(collectCents(codebook), m, dim).as("codes"))
-  }
+      cellCol(coarse, dim).as("cell"),
+      codesCol(codebook, m, dim).as("codes"))
 
   /** Per-cell radius: each cell's max L2 distance from its centroid
     * over the UNIT vectors assigned to it — the exact-search bound's
@@ -119,14 +118,18 @@ object AnnIndex {
   def storesVectors(wh: Warehouse, idx: String): Boolean =
     wh.table(s"${idx}_codes").columns.contains("vec")
 
-  /** The coarse table's persisted shape: centroids + per-cell radius
-    * (0.0 for a cell with no members yet). */
-  private def coarseWithRadii(coarse: DataFrame,
-      radii: DataFrame): DataFrame =
-    coarse.select("sub", "cid", "c")
-      .join(radii.withColumnRenamed("cell", "cid"), Seq("cid"), "left")
+  /** The coarse table's persisted shape, in one file: freshly trained
+    * centroids + each cell's radius over the stored `codes` (0.0 for a
+    * cell with no members yet). */
+  private def coarseRadii(spark: SparkSession, unit: DataFrame,
+      codes: DataFrame, coarse: Cents): DataFrame = {
+    val cents = centsFrame(spark, coarse)
+    cents.join(cellRadii(unit, codes, cents)
+        .withColumnRenamed("cell", "cid"), Seq("cid"), "left")
       .select(col("sub"), col("cid"), col("c"),
         coalesce(col("radius"), lit(0.0)).as("radius"))
+      .coalesce(1)
+  }
 
   /** Train both quantizers on one bounded deterministic sample of
     * `source` (vec_id, embedding), encode the corpus once, and persist
@@ -153,35 +156,28 @@ object AnnIndex {
     // within-batch dedup (refresh's contract): a duplicated vec_id
     // would store duplicate code rows and surface twice in a top-k
     val unit = l2Normalized(source.dropDuplicates("vec_id"))
-    val sample = trainingSample(unit,
-      math.max(defaultSampleN(1, nCells), defaultSampleN(m, k)))
-    val coarse = pqTrain(sample, m = 1, k = nCells, iters = 3)
-      .localCheckpoint()
-    val codebook = pqTrain(sample, m = m, k = k, iters = 6)
-      .localCheckpoint()
+    val (coarse, codebook, dim) = trainIvfPq(unit, nCells, m, k)
+    val spark0 = source.sparkSession
     // codebook/coarse are GEOMETRY-bounded (m·k codebook rows, nCells
-    // coarse rows — independent of corpus size), but inherit the
-    // training computation's partitioning: saved as-is they spread a
-    // few hundred rows over ~2 dozen tiny files, and every serving
-    // probe's merged codebook∪ranking collect then schedules that many
-    // near-empty tasks (r18, guide §6.2/§5). One file each makes the
-    // bounded collect a couple of tasks at ANY corpus scale; rows are
-    // byte-identical.
-    wh.save(s"${idx}_codebook", codebook.coalesce(1))
-    val codes = withStoredVec(
-      encode(unit, coarse, codebook, m, dimOf(unit)),
+    // coarse rows — independent of corpus size), but a local frame
+    // spreads its rows over up to defaultParallelism tiny files, and
+    // every serving probe's merged codebook∪ranking collect then
+    // schedules one near-empty task per file (r18, guide §6.2/§5). One
+    // file each makes the bounded collect a couple of tasks at ANY
+    // corpus scale.
+    wh.save(s"${idx}_codebook", centsFrame(spark0, codebook).coalesce(1))
+    val codes = withStoredVec(encode(unit, coarse, codebook, m, dim),
       source, storeVectors)
     wh.save(s"${idx}_codes", codes, partitionBy = Seq("cell"))
     // per-cell radii off the stored codes (one bounded agg pass —
     // build-time priced), persisted ON the coarse table so every
     // serving cut pins centroids and bounds together
-    wh.save(s"${idx}_coarse", coarseWithRadii(coarse,
-      cellRadii(unit, wh.table(s"${idx}_codes"), coarse)).coalesce(1))
+    wh.save(s"${idx}_coarse", coarseRadii(spark0, unit,
+      wh.table(s"${idx}_codes"), coarse))
     // right-to-be-forgotten tombstones: ids remove()d stay out even
     // when later refresh sources still carry them
     wh.save(s"${idx}_gone", source.select("vec_id").limit(0))
     // record the geometry: every later retrain reads it from here
-    val spark0 = source.sparkSession
     import spark0.implicits._
     wh.save(s"${idx}_meta",
       Seq((nCells, m, k)).toDF("n_cells", "m", "k"))
@@ -214,23 +210,17 @@ object AnnIndex {
       s"$idx: k must be in [1, 127] (codes are one byte), got $k")
   }
 
-  /** The index's frozen (nCells, m, k), read from `<idx>_meta`; a
-    * pre-meta index (built before the geometry freeze) derives the
-    * same three numbers from the stored codebooks — the shape is fully
-    * determined by what build wrote, never by caller defaults. */
-  def geometry(wh: Warehouse, idx: String): (Int, Int, Int) =
-    if (wh.hasTable(s"${idx}_meta")) {
-      val r = wh.table(s"${idx}_meta").select("n_cells", "m", "k").first()
-      (r.getInt(0), r.getInt(1), r.getInt(2))
-    } else {
-      val nCells = wh.table(s"${idx}_coarse").count().toInt
-      val km = wh.table(s"${idx}_codebook")
-        .agg(max(col("sub")), countDistinct(col("cid"))).first()
-      (nCells, km.getInt(0) + 1, km.getLong(1).toInt)
-    }
-
-  private def dimOf(unit: DataFrame): Int =
-    unit.select(size(col("embedding"))).first().getInt(0)
+  /** The index's frozen (nCells, m, k), read from `<idx>_meta` —
+    * written by every build and retrain, so the shape is fully
+    * determined by what build wrote, never by caller defaults. A
+    * missing `_meta` refuses loudly, naming the table. */
+  def geometry(wh: Warehouse, idx: String): (Int, Int, Int) = {
+    if (!wh.hasTable(s"${idx}_meta"))
+      throw new IllegalStateException(s"vector index $idx: ${idx}_meta " +
+        "is missing — the index's geometry is recorded only there")
+    val r = wh.table(s"${idx}_meta").select("n_cells", "m", "k").first()
+    (r.getInt(0), r.getInt(1), r.getInt(2))
+  }
 
   /** Bring the index up to date with `source`: vectors whose ids are
     * not yet in the codes table are encoded with the STORED codebooks
@@ -258,17 +248,15 @@ object AnnIndex {
       .dropDuplicates("vec_id")
     if (delta.isEmpty) 0L
     else {
-      val codebook = wh.table(s"${idx}_codebook")
-      val (m, dsub) = {
-        val r = codebook.agg(max(col("sub")), max(size(col("c")))).first()
-        (r.getInt(0) + 1, r.getInt(1))
-      }
+      val codebook = collectCents(wh.table(s"${idx}_codebook"))
+      val m = codebook.map(_._1).max + 1
       val before = wh.countRows(s"${idx}_codes").getOrElse(0L)
       val coarse = wh.table(s"${idx}_coarse")
       val unit = l2Normalized(delta)
       // the encode feeds BOTH the append and the radius growth — pin
       // it once (delta-sized) instead of projecting twice
-      val enc = encode(unit, coarse, codebook, m, m * dsub)
+      val enc = encode(unit, collectCents(coarse), codebook, m,
+        m * codebook.head._3.length)
         .localCheckpoint()
       try {
         // radius FIRST, codes second — the crash-safe order: a grown
@@ -495,8 +483,7 @@ object AnnIndex {
     * Returns (check, status ok|error, subject, detail), errors first.
     * SQL: `AUDIT VECTOR INDEX idx`. */
   def audit(wh: Warehouse, idx: String): DataFrame = {
-    val names = (servingTables(idx) :+ s"${idx}_gone") ++
-      (if (wh.hasTable(s"${idx}_meta")) Seq(s"${idx}_meta") else Nil)
+    val names = servingTables(idx) ++ Seq(s"${idx}_gone", s"${idx}_meta")
     val snap = wh.snapshotTables(names)
     val read: String => DataFrame = snap(_)
     val spark = read(s"${idx}_codes").sparkSession
@@ -834,31 +821,23 @@ object AnnIndex {
       "retrain: no live vectors — an index with nothing left to serve " +
         "should be dropped, not retrained")
     val unit = l2Normalized(live)
-    val sample = trainingSample(unit,
-      math.max(defaultSampleN(1, nCells), defaultSampleN(m, k)))
-    val coarse = pqTrain(sample, m = 1, k = nCells, iters = 3)
-      .localCheckpoint()
-    val codebook = pqTrain(sample, m = m, k = k, iters = 6)
-      .localCheckpoint()
+    val (coarse, codebook, dim) = trainIvfPq(unit, nCells, m, k)
     // a vector-storing index STAYS one across a re-shape (derived from
     // the table being replaced, read before the transaction swaps it)
-    val codes = withStoredVec(
-      encode(unit, coarse, codebook, m, dimOf(unit)),
+    val codes = withStoredVec(encode(unit, coarse, codebook, m, dim),
       live, storesVectors(wh, idx))
     val spark0 = source.sparkSession
     import spark0.implicits._
     wh.transaction(Seq(s"${idx}_coarse", s"${idx}_codebook",
         s"${idx}_codes", s"${idx}_meta")) {
       // one file per bounded table — build's rationale (r18)
-      wh.save(s"${idx}_codebook", codebook.coalesce(1))
+      wh.save(s"${idx}_codebook", centsFrame(spark0, codebook).coalesce(1))
       wh.save(s"${idx}_codes", codes, partitionBy = Seq("cell"))
       // radii over the freshly staged codes (the transaction reads its
       // own uncommitted writes) — exact radii, not carried-forward
       // upper bounds: retrain is the moment conservatism resets
-      wh.save(s"${idx}_coarse", coarseWithRadii(coarse,
-        cellRadii(unit, wh.table(s"${idx}_codes"), coarse)).coalesce(1))
-      // a pre-meta (legacy) index gains its meta table here — retrain
-      // MIGRATES it into the recorded-geometry era
+      wh.save(s"${idx}_coarse", coarseRadii(spark0, unit,
+        wh.table(s"${idx}_codes"), coarse))
       wh.save(s"${idx}_meta",
         Seq((nCells, m, k)).toDF("n_cells", "m", "k"))
     }
@@ -1589,14 +1568,6 @@ object AnnIndex {
         "probe answers nothing and the widening loop needs a seed")
     val spark = source.sparkSession
     import spark.implicits._
-    // driver-side sequential-fold L2 for the ADC tables — the same
-    // IEEE operation order as the l2sq Column (zip_with + left-fold
-    // aggregate), so the tables are bit-identical to pqRank's
-    def l2sqD(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
     // per query, the FULL best-first cell ranking (tie-break (d2, cid)
     // — query()'s orderBy; nProbe takes its prefix, auto-widening a
     // longer one), computed IN SPARK: the query vectors broadcast
@@ -1643,14 +1614,14 @@ object AnnIndex {
       .map { case (qid, rs) =>
         qid -> rs.sortBy(t => (t._3, t._2)).map(_._2).toSeq }
     val nCells = rankedById.headOption.map(_._2.length).getOrElse(0)
-    // the m·k ADC distance table per query (k·m scalars — bounded)
+    // the m·k ADC distance table per query (k·m scalars — bounded),
+    // through l2sqAt: the l2sq Column's left fold, so the tables are
+    // bit-identical to pqRank's
     val qrows: Seq[(Long, Seq[Double], Seq[Double])] =
       qvs.map { case (qid, q) =>
         val flat = Array.fill(m * k)(Double.MaxValue)
         cbRows.foreach { case (s0, cid, c) =>
-          flat(s0 * k + cid) = l2sqD(
-            java.util.Arrays.copyOfRange(q, s0 * dsub, (s0 + 1) * dsub),
-            c.toArray)
+          flat(s0 * k + cid) = Similarity.l2sqAt(q, s0 * dsub, c.toArray)
         }
         (qid, flat.toSeq, q.toSeq)
       }

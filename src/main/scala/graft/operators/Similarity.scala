@@ -355,72 +355,117 @@ object Similarity {
     * partition keeps its local top-n, one bounded merge), so drawing
     * the sample is ONE pass over the corpus with no full sort. The
     * sample (and only the sample — never the corpus) is pinned with
-    * localCheckpoint because Lloyd iterates over it; at ≤n rows the
-    * pin is executor-trivial. This is what makes PQ/IVF training
-    * viable at 100 TB: the codebook needs ~100 points per centroid,
-    * not nine scans of the corpus. */
+    * localCheckpoint, so training's one collect reads ≤ n pinned rows
+    * and never rescans the corpus files. This is what makes PQ/IVF
+    * training viable at 100 TB: the codebook needs ~100 points per
+    * centroid, not a scan of the corpus. */
   def trainingSample(unit: DataFrame, n: Int): DataFrame =
     unit.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(n)
       .localCheckpoint()
 
+  /** Driver-side centroids, one (sub, cid, c) per centroid. */
+  type Cents = Array[(Int, Int, Seq[Double])]
+
   /** PQ codebook training — `m` subspaces × `k` centroids via Lloyd
-    * iterations, entirely in DataFrame ops (no driver-side vectors):
-    * subvectors explode once, assignment is a broadcast-centroid argmin
-    * (min over a (distance, cid) struct — deterministic tie-break), the
-    * re-estimation is a positional mean. Init is the `k` smallest ids
-    * present — deterministic; an emptied cell keeps its previous
-    * centroid. Callers hand this a [[trainingSample]], never the
-    * corpus: Lloyd touches its input `iters + 1` times, which is fine
-    * over a bounded pinned sample and a scale-killer over 100 TB. The
-    * codebook (m·k rows) stays broadcast-sized forever. Returns
-    * (sub, cid, c: array<double>). */
+    * iterations in the JVM over a sample read in ONE collect. Init is
+    * the `k` smallest vec_ids present (fewer rows give fewer
+    * centroids); assignment is the argmin over (l2sq, cid) — the
+    * distance a left fold from 0.0, NaN last as in Spark's struct
+    * order, ties to the smaller cid ([[codesCol]]'s tie-break);
+    * re-estimation is the per-position mean, members summed in
+    * ascending vec_id order; a cell that empties keeps its centroid.
+    * A repeated vec_id refuses (assignment is per id). Callers hand
+    * this a [[trainingSample]], never the corpus: the driver holds
+    * sampleN × dim doubles — 6.6 MB at the default max(100·k·m,
+    * 10 000) rows of 64-d vectors, 7.7 MB at 150 cells. The codebook
+    * (m·k rows) stays broadcast-sized forever. */
   def pqTrain(emb: DataFrame, m: Int = 8, k: Int = 16,
-      iters: Int = 3): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).first().getInt(0)
+      iters: Int = 3): Cents =
+    lloyd(collectSample(emb), m, k, iters)
+
+  /** The IVF-PQ quantizers of [[AnnIndex]] and [[annIvfPq]] from ONE
+    * collect of ONE bounded sample (sized for the finer of the two):
+    * the coarse cells are k-means — [[pqTrain]] with m = 1, 3
+    * iterations — and the PQ codebook trains 6 iterations. Returns
+    * (coarse, codebook, dim). */
+  private[operators] def trainIvfPq(unit: DataFrame, nCells: Int, m: Int,
+      k: Int): (Cents, Cents, Int) = {
+    val rows = collectSample(trainingSample(unit,
+      math.max(defaultSampleN(1, nCells), defaultSampleN(m, k))))
+    (lloyd(rows, 1, nCells, 3), lloyd(rows, m, k, 6), rows.head._2.length)
+  }
+
+  /** A local (sub, cid, c) frame of `cents` — only for saving a table
+    * or for a join against stored codes. */
+  private[operators] def centsFrame(spark: SparkSession,
+      cents: Cents): DataFrame =
+    spark.createDataFrame(cents.toSeq).toDF("sub", "cid", "c")
+
+  /** A training sample's (vec_id, embedding as doubles), ascending
+    * vec_id, in one collect; a null element throws on unboxing. */
+  private def collectSample(emb: DataFrame): Array[(Long, Array[Double])] = {
+    val rows = emb.select(col("vec_id"),
+        transform(col("embedding"), _.cast("double"))).collect()
+      .map(r => (r.getLong(0),
+        r.getSeq[java.lang.Double](1).map(_.doubleValue).toArray))
+      .sortBy(_._1)
+    require(rows.nonEmpty, "pqTrain: empty training sample")
+    rows.indices.drop(1).find(i => rows(i)._1 == rows(i - 1)._1)
+      .foreach(i => throw new IllegalArgumentException(
+        s"pqTrain: vec_id ${rows(i)._1} repeats in the training sample"))
+    require(rows.forall(_._2.length == rows.head._2.length),
+      "pqTrain: training vectors differ in dimension")
+    rows
+  }
+
+  /** Squared L2 between `v[off, off + c.length)` and `c`: the left fold
+    * from 0.0 that [[l2sq]] evaluates, so every double is identical. */
+  private[operators] def l2sqAt(v: Array[Double], off: Int,
+      c: Array[Double]): Double = {
+    var d = 0.0
+    for (p <- c.indices) { val t = v(off + p) - c(p); d = d + t * t }
+    d
+  }
+
+  /** [[pqTrain]]'s Lloyd over rows sorted by vec_id. */
+  private def lloyd(rows: Array[(Long, Array[Double])], m: Int, k: Int,
+      iters: Int): Cents = {
+    val dim = rows.head._2.length
     require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
     val dsub = dim / m
-    val subs = emb.select(col("vec_id"),
-      explode(array((0 until m).map(s0 => struct(lit(s0).as("sub"),
-        transform(slice(col("embedding"), s0 * dsub + 1, dsub),
-          _.cast("double")).as("v"))): _*)).as("sv"))
-      .select(col("vec_id"), col("sv.sub").as("sub"), col("sv.v").as("v"))
-      .localCheckpoint() // reused iters+2 times: pin, don't re-explode
-    // init = the k smallest vec_ids PRESENT (collected — k rows, the
-    // codebook bound): the input may be a trainingSample whose ids are
-    // arbitrary, so "vec_id < k" would under-fill the codebook
-    val initIds = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
-      .collect().map(_.getLong(0))
-    val cidOf = map(initIds.zipWithIndex.flatMap { case (id, i) =>
-      Seq(lit(id), lit(i)) }.toSeq: _*)
-    val init = subs.filter(col("vec_id").isin(initIds.toSeq: _*))
-      .select(col("sub"), element_at(cidOf, col("vec_id")).as("cid"),
-        col("v").as("c"))
-    (1 to iters).foldLeft(init) { (cents, _) =>
-      val assigned = subs.join(broadcast(cents), Seq("sub"))
-        .groupBy("sub", "vec_id")
-        .agg(min(struct(l2sq(col("v"), col("c")).as("d2"),
-          col("cid"))).getField("cid").as("cid"))
-      val members = subs.join(assigned, Seq("sub", "vec_id"))
-        .select(col("sub"), col("cid"), posexplode(col("v")).as(Seq("p", "x")))
-        .groupBy("sub", "cid", "p").agg(avg("x").as("mx"))
-        .groupBy("sub", "cid")
-        .agg(transform(array_sort(collect_list(struct(col("p"), col("mx")))),
-          _.getField("mx")).as("cNew"))
-      cents.join(members, Seq("sub", "cid"), "left")
-        .select(col("sub"), col("cid"),
-          coalesce(col("cNew"), col("c")).as("c"))
-    }
+    val init = rows.take(k)
+    (0 until m).flatMap { s0 =>
+      val off = s0 * dsub
+      val cents = init.map { case (_, v) => v.slice(off, off + dsub) }
+      for (_ <- 1 to iters) {
+        val sums = Array.fill(cents.length, dsub)(0.0)
+        val counts = new Array[Long](cents.length)
+        rows.foreach { case (_, v) =>
+          var best = 0
+          var bestD = l2sqAt(v, off, cents(0))
+          for (c <- 1 until cents.length) {
+            // Spark's struct order: NaN above every number
+            val d = l2sqAt(v, off, cents(c))
+            if (d < bestD || (bestD.isNaN && !d.isNaN)) { best = c; bestD = d }
+          }
+          counts(best) += 1
+          for (p <- 0 until dsub) sums(best)(p) += v(off + p)
+        }
+        for (c <- cents.indices if counts(c) > 0)
+          cents(c) = sums(c).map(_ / counts(c).toDouble)
+      }
+      cents.zipWithIndex.map { case (c, cid) => (s0, cid, c.toSeq) }
+    }.toArray
   }
 
   /** The per-subspace nearest-centroid argmin as a pure projection
     * Column: the codebook (m·k rows — the same bounded collect pqRank's
     * distance table does) becomes literals, and each subspace's code is
-    * `array_min` over k (distance, cid) structs — identical
-    * lexicographic tie-break to training's `min(struct(d2, cid))`.
+    * `array_min` over k (distance, cid) structs — the same
+    * lexicographic tie-break as [[pqTrain]]'s argmin.
     * Whole-stage-codegen arithmetic, NO join, NO shuffle. */
-  private[operators] def codesCol(cents: Array[(Int, Int, Seq[Double])], m: Int,
-      dim: Int): Column = {
+  private[operators] def codesCol(cents: Cents, m: Int, dim: Int): Column = {
     val dsub = dim / m
     array((0 until m).map { s0 =>
       val sv = transform(slice(col("embedding"), s0 * dsub + 1, dsub),
@@ -450,8 +495,7 @@ object Similarity {
     *    codegen cannot compile), folded with `least` over (d2, cid)
     *    structs — the SAME lexicographic tie-break as `array_min`.
     * Both paths: shuffle-free, join-free, NO UDF. */
-  private[operators] def cellCol(cents: Array[(Int, Int, Seq[Double])],
-      dim: Int): Column = {
+  private[operators] def cellCol(cents: Cents, dim: Int): Column = {
     val sorted = cents.filter(_._1 == 0).sortBy(_._2)
     if (sorted.length <= 127)
       element_at(codesCol(cents, 1, dim), 1).cast("int")
@@ -468,7 +512,9 @@ object Similarity {
     }
   }
 
-  private[operators] def collectCents(cents: DataFrame): Array[(Int, Int, Seq[Double])] =
+  /** The centroids of a STORED codebook or coarse table (m·k or
+    * nCells rows), as [[pqTrain]] returns them. */
+  def collectCents(cents: DataFrame): Cents =
     cents.collect().map(r => (r.getAs[Int]("sub"), r.getAs[Int]("cid"),
       r.getAs[scala.collection.Seq[Double]]("c").toVector: Seq[Double]))
 
@@ -478,28 +524,23 @@ object Similarity {
     * stores and scans. The encode is ONE shuffle-free projection pass
     * over the corpus ([[codesCol]]) — the full-corpus
     * explode→join→groupBy a naive encode would shuffle is gone. */
-  def pqCodes(emb: DataFrame, cents: DataFrame, m: Int = 8): DataFrame = {
-    val dim = emb.select(size(col("embedding"))).first().getInt(0)
-    emb.select(col("vec_id"), codesCol(collectCents(cents), m, dim).as("codes"))
-  }
+  def pqCodes(emb: DataFrame, cents: Cents, m: Int = 8): DataFrame =
+    emb.select(col("vec_id"),
+      codesCol(cents, m, m * cents.head._3.length).as("codes"))
 
-  /** ADC ranking from stored codes: the query's m×k distance table
-    * (one row per (sub, cid) — codebook-sized, collected like the
-    * hyperplane constants) becomes a broadcast literal, and each
-    * corpus row's approximate distance is m table lookups summed —
-    * no float vectors touched, no shuffle, scan → score →
+  /** ADC ranking from stored codes: the query's m×k distance table is
+    * computed on the driver from the codebook (m·k entries, the same
+    * left fold as [[l2sq]]) and travels as one literal; each corpus
+    * row's approximate distance is m table lookups summed — no float
+    * vectors touched, no shuffle, scan → score →
     * TakeOrderedAndProject. */
-  def pqRank(codes: DataFrame, cents: DataFrame, queryVec: Seq[Double],
+  def pqRank(codes: DataFrame, cents: Cents, queryVec: Seq[Double],
       m: Int = 8, k: Int = 16, topK: Int = 10): DataFrame = {
     val dsub = queryVec.size / m
-    val qlit = array(queryVec.map(lit): _*)
-    val table = cents.select(col("sub"), col("cid"),
-      l2sq(slice(qlit, col("sub") * dsub + 1, lit(dsub)),
-        col("c")).as("d2"))
-      .collect().map(r => (r.getAs[Int]("sub"), r.getAs[Int]("cid"),
-        r.getAs[Double]("d2")))
+    val q = queryVec.toArray
     val flat = Array.fill(m * k)(Double.MaxValue)
-    table.foreach { case (s0, c0, d) => flat(s0 * k + c0) = d }
+    cents.foreach { case (s0, c0, c) =>
+      flat(s0 * k + c0) = l2sqAt(q, s0 * dsub, c.toArray) }
     pqRankWith(codes, flat, m, k, topK)
   }
 
@@ -537,35 +578,29 @@ object Similarity {
     * ranks by cosine inside each cell. */
   def annIvfPq(s: SparkSession, d: String, topK: Int = 10,
       overquery: Int = 5, nCells: Int = 8, nProbe: Int = 3): DataFrame = {
-    val emb = T.embeddings(s, d)
-    val unit = l2Normalized(emb)
+    val unit = l2Normalized(T.embeddings(s, d))
     // BOTH quantizers train on one bounded deterministic sample (sized
     // for the finer of the two) — never the corpus. pqTrain with m=1 IS
     // k-means (one subspace covering the whole dimension), so the cells
     // are geometric neighborhoods, not class labels; on unit vectors
     // L2-nearest ≡ cosine-nearest.
-    val sample = trainingSample(unit,
-      math.max(defaultSampleN(1, nCells), defaultSampleN(8, 16)))
-    val coarse = pqTrain(sample, m = 1, k = nCells, iters = 3).localCheckpoint()
-    val codebook = pqTrain(sample, iters = 6).localCheckpoint()
+    val (coarse, codebook, dim) = trainIvfPq(unit, nCells, 8, 16)
     // encode cell + codes in ONE shuffle-free projection pass over the
     // corpus: the coarse cell is a 1-subspace code (one byte naming the
     // nearest coarse centroid), the PQ codes are the m-subspace argmin —
     // both pure [[codesCol]] expressions over the same scan
-    val dim = unit.select(size(col("embedding"))).first().getInt(0)
     val codes = unit.select(col("vec_id"),
-      element_at(codesCol(collectCents(coarse), 1, dim), 1)
-        .cast("int").as("cell"),
-      codesCol(collectCents(codebook), 8, dim).as("codes"))
+      element_at(codesCol(coarse, 1, dim), 1).cast("int").as("cell"),
+      codesCol(codebook, 8, dim).as("codes"))
     val q = unit.filter(col("vec_id") === QUERY_ID)
       .select("embedding").first().getSeq[Double](0)
-    // multi-probe: the query's nProbe nearest cells (the IVF recall
-    // lever — a boundary query's neighbors straddle cells). nCells
-    // rows collected, like the codebook.
-    val qlit = array(q.map(lit): _*)
-    val probed = coarse.select(col("cid"), l2sq(qlit, col("c")).as("d2"))
-      .orderBy(col("d2").asc, col("cid").asc).limit(nProbe)
-      .collect().map(_.getInt(0)).toSeq
+    // multi-probe: the query's nProbe nearest cells by (d2, cid) (the
+    // IVF recall lever — a boundary query's neighbors straddle cells)
+    val qa = q.toArray
+    val probed = coarse.map { case (_, cid, c) =>
+        (l2sqAt(qa, 0, c.toArray), cid) }
+      .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      .take(nProbe).map(_._2).toSeq
     // ADC-rank ONLY the probed cells' stored codes, overquery,
     // exact-cosine re-rank
     val cands = pqRank(
@@ -576,6 +611,26 @@ object Similarity {
         round(VectorFunctions.cosineExact(col("embedding"), col("qe")), 12).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(topK)
+  }
+
+  /** The e12 lanes' body: train the m=8 × k=16 codebook on a bounded
+    * deterministic sample (the corpus is touched exactly once, by the
+    * encode projection), ADC-rank the `pool(codes)` best candidates,
+    * then exact-cosine re-rank them to the top TOP_K. */
+  private def pqTopK(s: SparkSession, d: String,
+      pool: DataFrame => Int): DataFrame = {
+    val unit = l2Normalized(T.embeddings(s, d))
+    val cents = pqTrain(trainingSample(unit, defaultSampleN(8, 16)),
+      iters = 6)
+    val codes = pqCodes(unit, cents)
+    val q = unit.filter(col("vec_id") === QUERY_ID)
+      .select("embedding").first().getSeq[Double](0)
+    val cands = pqRank(codes, cents, q, topK = pool(codes))
+    withQueryVec(s, d).join(cands.select("vec_id"), "vec_id")
+      .select(col("vec_id"),
+        round(VectorFunctions.cosineExact(col("embedding"), col("qe")), 12).as("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+      .limit(TOP_K)
   }
 
   /** Cluster-balanced DIVERSITY sampling (sp11): keep at most `cap`
@@ -668,8 +723,8 @@ object Similarity {
     * Returns (vec_id, cluster, kept). */
   def semanticAssign(emb: DataFrame, nClusters: Int = 8): DataFrame = {
     val unit = l2Normalized(emb)
-    val sample = trainingSample(unit, defaultSampleN(1, nClusters))
-    val cents = collectCents(pqTrain(sample, m = 1, k = nClusters, iters = 3))
+    val cents = pqTrain(trainingSample(unit, defaultSampleN(1, nClusters)),
+      m = 1, k = nClusters)
     // nearest centroid as ONE projection: array_min over (d2, cid)
     // structs — training's exact argmin and tie-break — keeping both
     // the cell AND the centroid distance (the survivor rank) from a
@@ -1218,24 +1273,7 @@ object Similarity {
     // Correctness story (no DuckDB oracle can train Lloyd):
     // SimilaritySpec asserts recall@10 vs the exact e1 ranking on the
     // real embeddings table, plus the ADC floor/code-shape invariants.
-    Q("e12_pq_topk", None,
-      (s, d) => {
-        val emb = T.embeddings(s, d)
-        val unit = l2Normalized(emb)
-        // codebook trains on a bounded deterministic sample — the
-        // corpus is touched exactly once, by the encode projection
-        val cents = pqTrain(trainingSample(unit, defaultSampleN(8, 16)),
-          iters = 6).localCheckpoint()
-        val codes = pqCodes(unit, cents)
-        val q = unit.filter(col("vec_id") === QUERY_ID)
-          .select("embedding").first().getSeq[Double](0)
-        val cands = pqRank(codes, cents, q, topK = 5 * TOP_K)
-        withQueryVec(s, d).join(cands.select("vec_id"), "vec_id")
-          .select(col("vec_id"),
-            round(VectorFunctions.cosineExact(col("embedding"), col("qe")), 12).as("cosine"))
-          .orderBy(col("cosine").desc, col("vec_id").asc)
-          .limit(TOP_K)
-      }),
+    Q("e12_pq_topk", None, (s, d) => pqTopK(s, d, _ => 5 * TOP_K)),
 
     // E12-full — the b3_ann_full_wh trick applied to the PURE-PQ lane:
     // a candidate pool covering the whole corpus makes the exact
@@ -1245,27 +1283,12 @@ object Similarity {
     // (codebook quality can't save a broken encode/ADC/rank pipe —
     // any wrong code, lookup, or join key drops a true-top-k id from
     // the pool and the hash diverges). e12_pq_topk stays the honest
-    // 5×TOP_K production shape with its recall-floor spec.
+    // 5×TOP_K production shape with its recall-floor spec. The ADC
+    // pool is every encoded row: the rank stage must still score ALL
+    // codes (a silently-dropped row would shrink the pool and show up
+    // as a missing candidate here).
     Q("e12_pq_full_rerank", Some(exactCosineTopKSql()),
-      (s, d) => {
-        val emb = T.embeddings(s, d)
-        val unit = l2Normalized(emb)
-        val cents = pqTrain(trainingSample(unit, defaultSampleN(8, 16)),
-          iters = 6).localCheckpoint()
-        val codes = pqCodes(unit, cents)
-        val q = unit.filter(col("vec_id") === QUERY_ID)
-          .select("embedding").first().getSeq[Double](0)
-        // ADC pool = every encoded row: the rank stage must still
-        // score ALL codes (a silently-dropped row would shrink the
-        // pool and show up as a missing candidate here)
-        val n = codes.count().toInt
-        val cands = pqRank(codes, cents, q, topK = n)
-        withQueryVec(s, d).join(cands.select("vec_id"), "vec_id")
-          .select(col("vec_id"),
-            round(VectorFunctions.cosineExact(col("embedding"), col("qe")), 12).as("cosine"))
-          .orderBy(col("cosine").desc, col("vec_id").asc)
-          .limit(TOP_K)
-      }),
+      (s, d) => pqTopK(s, d, _.count().toInt)),
 
     // E13 — IVF-PQ, the full production composition (see [[annIvfPq]]):
     // e7's coarse cells bound the scan to 1/k of the corpus, e12's

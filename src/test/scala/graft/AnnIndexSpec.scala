@@ -68,8 +68,10 @@ class AnnIndexSpec extends AnyFunSuite {
     // pqCodes(m=8), the coarse cell via pqCodes(m=1) (whose one-byte
     // code IS the cell id)
     val unit = Similarity.l2Normalized(emb)
-    val batch = Similarity.pqCodes(unit, wh.table("ann_codebook"), m = 8)
-      .join(Similarity.pqCodes(unit, wh.table("ann_coarse"), m = 1)
+    val batch = Similarity.pqCodes(unit,
+        Similarity.collectCents(wh.table("ann_codebook")), m = 8)
+      .join(Similarity.pqCodes(unit,
+          Similarity.collectCents(wh.table("ann_coarse")), m = 1)
         .select(col("vec_id"),
           element_at(col("codes"), 1).cast("int").as("cell")), "vec_id")
     val stored = wh.table("ann_codes")
@@ -462,6 +464,56 @@ class AnnIndexSpec extends AnyFunSuite {
     // the refusal points the caller at the DELIBERATE re-shape lane
     assert(e.getMessage.contains("retrainAs"))
     assert(shape() == ((16L, 4, 8L)))
+  }
+
+  test("an index without its _meta table refuses loudly, naming the table, wherever the geometry is read") {
+    val wh = new Warehouse(spark, tmp("ann_nometa"))
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 100)
+    AnnIndex.build(wh, "ann", emb, nCells = 4, m = 4, k = 8)
+    wh.dropTable("ann_meta")
+    for ((what, run) <- Seq[(String, () => Any)](
+        "geometry" -> (() => AnnIndex.geometry(wh, "ann")),
+        "describe" -> (() => AnnIndex.describe(wh, "ann")),
+        "retrain" -> (() => AnnIndex.retrain(wh, "ann", emb)),
+        "audit" -> (() => AnnIndex.audit(wh, "ann").collect()))) {
+      val e = intercept[RuntimeException](run())
+      assert(e.getMessage.contains("ann_meta"), s"$what: ${e.getMessage}")
+    }
+  }
+
+  test("default geometry on clustered unit vectors: approximate recall@10 vs brute force is bounded by the 5x ADC pool, not by the cells or the re-rank") {
+    // 2,000 vectors in 10 tight clusters; query 0 sits in cluster 0,
+    // so its true top-10 is 10 of that cluster's 200 members
+    val wh = new Warehouse(spark, tmp("ann_recall"))
+    val emb = clustered(10, 200, 64, jitter = 0.3, seed = 3)
+      .localCheckpoint()
+    AnnIndex.build(wh, "ann", emb) // 8 cells, m = 8, k = 16
+    val vecs = emb.collect().map(r =>
+      r.getLong(0) -> r.getSeq[Double](1).toArray)
+    val q = vecs.find(_._1 == 0L).get._2
+    def cos(a: Array[Double]): Double =
+      a.zip(q).map { case (x, y) => x * y }.sum /
+        math.sqrt(a.map(x => x * x).sum * q.map(x => x * x).sum)
+    val truth = vecs.map { case (id, v) => (id, cos(v)) }
+      .sortBy(t => (-t._2, t._1)).take(10).map(_._1).toSet
+    def recall(nProbe: Int, overquery: Int, exact: Boolean = false): Int =
+      (AnnIndex.query(wh, "ann", emb, queryId = 0L, nProbe = nProbe,
+        overquery = overquery, exact = exact)
+        .collect().map(_.getLong(0)).toSet intersect truth).size
+    val default = recall(AnnIndex.DefaultNProbe, AnnIndex.DefaultOverquery)
+    val allCells = recall(8, AnnIndex.DefaultOverquery)
+    // a pool of 200 × 10 = every vector: each row of the 3 probed cells
+    // is re-ranked exactly
+    val wholeCells = recall(AnnIndex.DefaultNProbe, 200)
+    info(s"recall@10: default $default/10, all 8 cells with the 5x " +
+      s"pool $allCells/10, 3 cells re-ranked whole $wholeCells/10")
+    // the probed cells hold the whole true top-10 and the exact
+    // re-rank orders it right: no answer is lost outside the ADC stage
+    assert(wholeCells == 10 && recall(1, 1, exact = true) == 10)
+    // the loss is the ADC pool: 8×16 codes cannot order the 50 best
+    // of a tight cluster's members, and probing more cells does not help
+    assert(default == 5 && allCells == default,
+      s"default $default, all cells $allCells")
   }
 
   test("queryBatch ≡ the per-query loop row-for-row, filtered search included") {

@@ -229,8 +229,8 @@ class SimilaritySpec extends AnyFunSuite {
     val base = (0L until 100L).map(i => (i, vec()))
     val emb = (base :+ ((999L, base(5)._2.clone()))) // 999 = byte-copy of 5
       .toDF("vec_id", "embedding")
-    val cents = Similarity.pqTrain(emb).localCheckpoint()
-    assert(cents.count() == 8 * 16)
+    val cents = Similarity.pqTrain(emb)
+    assert(cents.length == 8 * 16)
     val codes = Similarity.pqCodes(emb, cents).localCheckpoint()
     // every vector: 8 codes, each in [0, 16)
     assert(codes.count() == 101)
@@ -286,17 +286,21 @@ class SimilaritySpec extends AnyFunSuite {
     val ids2 = Similarity.trainingSample(unit.repartition(7), n)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(ids1 == ids2, "training sample must be layout-independent")
-    // training reads ONLY the pinned sample: the Lloyd plan's lineage
-    // is severed from the corpus files — zero parquet scans in it
-    val cents = Similarity.pqTrain(sample, iters = 2)
-    val trainPlan = cents.queryExecution.executedPlan.toString
+    // training reads ONLY the pinned sample: exactly one query
+    // execution (the sample's collect), its lineage severed from the
+    // corpus files — zero parquet scans in it
+    val (cents, during) = org.apache.spark.sql.graft.ListenerBusDrain
+      .executions(spark)(Similarity.pqTrain(sample, iters = 2))
+    assert(during.size == 1, s"training ran ${during.size} query " +
+      s"executions:\n${during.map(_.executedPlan).mkString("\n")}")
+    val trainPlan = during.head.executedPlan.toString
     assert(!trainPlan.contains("FileScan"),
       s"training must not rescan the corpus:\n$trainPlan")
-    assert(cents.count() == 8 * 16)
+    assert(cents.length == 8 * 16)
     // the encode is ONE corpus scan and a pure projection — no
     // Exchange (the naive explode->join->groupBy encode shuffles the
     // whole corpus; the literal-centroid argmin must not)
-    val codes = Similarity.pqCodes(unit, cents.localCheckpoint())
+    val codes = Similarity.pqCodes(unit, cents)
     val encPlan = codes.queryExecution.executedPlan.toString
     assert(!encPlan.contains("Exchange"),
       s"encode must be shuffle-free:\n$encPlan")

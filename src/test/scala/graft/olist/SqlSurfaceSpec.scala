@@ -834,25 +834,12 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("SEARCH INDEX parses with ONE query execution, the df/stats read, and its plan has no Exchange and no Join (plain and filtered)") {
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.graft.ListenerBusDrain
     searchFixture("sql_search_parse")
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution,
-          ns: Long): Unit = { seen.add(qe); () }
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = { seen.add(qe); () }
-    }
     object Plans extends
       org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    spark.listenerManager.register(listener)
-    try for (q <- searchStatements) {
-      ListenerBusDrain(spark) // nothing earlier is still in flight
-      seen.clear()
-      val df = spark.sql(q)
-      ListenerBusDrain(spark)
-      val during = seen.toArray(Array.empty[QueryExecution]).toSeq
+    for (q <- searchStatements) {
+      val (df, during) = ListenerBusDrain.executions(spark)(spark.sql(q))
       assert(during.size == 1, s"$q ran ${during.size} query " +
         s"executions while parsing:\n${during.map(_.executedPlan)
           .mkString("\n")}")
@@ -863,7 +850,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       }
       assert(shuffled.isEmpty, s"$q: the parse-time read\n$plan")
       assert(df.collect().length == 10, q)
-    } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   test("SEARCH INDEX over a stats table without exactly one row fails loudly, naming the index and its stats table") {
