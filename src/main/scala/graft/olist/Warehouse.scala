@@ -5903,36 +5903,115 @@ class Warehouse(val spark: SparkSession, basePath: String,
         .eval(null).asInstanceOf[Long]).toOption)
   }
 
-  /** Build every dim + both facts from the given source tables.
-    * Statement order mirrors the reference build (Olist DW.sql:39-184). */
+  /** Build every dim + both facts from the given source tables, as the
+    * reference build's dependency graph (Olist DW.sql:39-184) rather
+    * than its statement order. The six dimensions read only the
+    * sources, so they are built at once: time_period, product followed
+    * by its new-segments append, location, origin, lead_type and
+    * business_type. orders_fact starts once time_period, product and
+    * location have committed; conversions_fact once time_period,
+    * product, origin, lead_type and business_type have. Every table
+    * keeps its statement, layout and commit path; the branches commit
+    * to different tables under their own table locks.
+    *
+    * The branches run on a pool that lives for this call. The calling
+    * thread makes its threads, so every build job carries the
+    * caller's Spark local properties (job group, description) and
+    * active session, and `cancelJobGroup` reaches a build. Once a
+    * branch fails, no branch starts after it; the call waits until
+    * every running branch has ended, then rethrows the failure of the
+    * earliest failing branch in statement order. No build thread or
+    * job outlives the call.
+    *
+    * Inside an open [[transaction]] the same graph runs on the calling
+    * thread: the transaction's state is this thread's, and it holds
+    * the table locks a pool thread would wait on. */
   def build(src: Map[String, DataFrame]): Unit = {
-    val time = TimeDim.generate(spark, "2016-09-01", "2019-12-31")
-    save("time_period", time)
-    save("product", Dimensions.product(src("category")))
-    save("location", Dimensions.location(src("geolocation")))
-    save("origin", Dimensions.origin(src("leads")))
-    save("lead_type", Dimensions.leadType(src("closed_deals")))
-    save("business_type", Dimensions.businessType(src("closed_deals")))
-    // dim append: new business segments not already in product dim
-    // (Olist DW.sql:71-75 — NOT IN + INSERT..SELECT as anti-join+append)
-    append("product",
-      Dimensions.newSegments(src("closed_deals"), table("product")))
-    // cluster the fact by date_key: files get tight date ranges, so the
-    // manifest's per-file stats let scan() skip files inside a year
-    // partition (and row-group stats prune inside each file) — the date
-    // axis is both the partition AND the clustering lever (SURVEY §4)
-    save("orders_fact",
-      Facts.ordersFact(src("orders"), src("order_items"), src("products"),
-        src("category"), src("sellers"), table("product"), table("location"),
-        table("time_period"), cutoff = "2019-01-01"),
-      partitionBy = Seq("year"), clusterBy = Seq("date_key"))
-    val conv = Facts.conversionsFact(src("leads"), src("closed_deals"),
-      src("sellers"), src("order_items"), table("origin"),
-      table("lead_type"), table("business_type"), table("product"),
-      table("time_period"))
-    // S8: DELETE WHERE avg_hrs_convert < 1 (Olist DW.sql:183-184) as
-    // anti-filter rewrite
-    save("conversions_fact", conv.filter(col("avg_hrs_convert") >= 1))
+    import java.util.concurrent.{CompletableFuture, CompletionException,
+      ConcurrentLinkedQueue, Executor, LinkedBlockingQueue,
+      ThreadPoolExecutor, TimeUnit}
+    val threads = new ConcurrentLinkedQueue[Thread]
+    val pool =
+      if (txnState.get() != null) None
+      else {
+        val p = new ThreadPoolExecutor(6, 6, 0L, TimeUnit.MILLISECONDS,
+          new LinkedBlockingQueue[Runnable], (r: Runnable) => {
+            val t = new Thread(r, s"warehouse-build-${threads.size}")
+            t.setDaemon(true)
+            threads.add(t)
+            t
+          })
+        // every thread now, from this thread: they inherit its local
+        // properties and active session at creation
+        p.prestartAllCoreThreads()
+        Some(p)
+      }
+    val exec: Executor = pool.getOrElse((r: Runnable) => r.run())
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // declared in statement order, each after the steps it reads
+    val steps = scala.collection.mutable.LinkedHashMap
+      .empty[String, CompletableFuture[Void]]
+    def step(name: String, after: String*)(body: => Unit): Unit =
+      steps(name) = CompletableFuture.allOf(after.map(steps): _*)
+        .thenRunAsync(() => if (!failed.get) {
+          try body
+          catch { case e: Throwable => failed.set(true); throw e }
+        }, exec)
+    try {
+      step("time_period") {
+        save("time_period", TimeDim.generate(spark, "2016-09-01", "2019-12-31"))
+      }
+      step("product") {
+        save("product", Dimensions.product(src("category")))
+        // dim append: new business segments not already in product dim
+        // (Olist DW.sql:71-75 — NOT IN + INSERT..SELECT as anti-join+append)
+        append("product",
+          Dimensions.newSegments(src("closed_deals"), table("product")))
+      }
+      step("location")(save("location", Dimensions.location(src("geolocation"))))
+      step("origin")(save("origin", Dimensions.origin(src("leads"))))
+      step("lead_type")(save("lead_type", Dimensions.leadType(src("closed_deals"))))
+      step("business_type") {
+        save("business_type", Dimensions.businessType(src("closed_deals")))
+      }
+      // cluster the fact by date_key: files get tight date ranges, so the
+      // manifest's per-file stats let scan() skip files inside a year
+      // partition (and row-group stats prune inside each file) — the date
+      // axis is both the partition AND the clustering lever (SURVEY §4)
+      step("orders_fact", "time_period", "product", "location") {
+        save("orders_fact",
+          Facts.ordersFact(src("orders"), src("order_items"), src("products"),
+            src("category"), src("sellers"), table("product"), table("location"),
+            table("time_period"), cutoff = "2019-01-01"),
+          partitionBy = Seq("year"), clusterBy = Seq("date_key"))
+      }
+      step("conversions_fact", "time_period", "product", "origin",
+          "lead_type", "business_type") {
+        val conv = Facts.conversionsFact(src("leads"), src("closed_deals"),
+          src("sellers"), src("order_items"), table("origin"),
+          table("lead_type"), table("business_type"), table("product"),
+          table("time_period"))
+        // S8: DELETE WHERE avg_hrs_convert < 1 (Olist DW.sql:183-184) as
+        // anti-filter rewrite
+        save("conversions_fact", conv.filter(col("avg_hrs_convert") >= 1))
+      }
+      // join() waits without being interrupted: every branch ends first
+      CompletableFuture.allOf(steps.values.toSeq: _*)
+        .handle[Void]((_, _) => null).join()
+      // a step whose input failed carries that input's failure, and
+      // comes after it in statement order
+      steps.values.find(_.isCompletedExceptionally).foreach { f =>
+        try f.join() catch { case e: CompletionException => throw e.getCause }
+      }
+    } finally pool.foreach { p =>
+      p.shutdown()
+      var interrupted = false
+      threads.forEach { t =>
+        while (t.isAlive)
+          try t.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
   }
 }
 
